@@ -38,19 +38,14 @@ from streaming_pipeline___spark_stream_and_kafla_for_cassendra_spark.streaming.p
     CdcPipeline,
 )
 
-# cdc_drain backlog: files per topic and envelopes per file; one file per
-# trigger, so the drain is exactly DRAIN_FILES micro-batches per query.
-DRAIN_FILES = 3
-DRAIN_EMPLOYEES_PER_FILE = 400
-DRAIN_ACTIVITIES_PER_FILE = 6_000
+# the drain reads one file per trigger: DRAIN_FILES micro-batches per query
 MAX_FILES_PER_TRIGGER = 1
-
-# cdc_steady open loop: one file per topic every STEADY_INTERVAL_S, read
-# with the file source's default (every new file in the next trigger).
-STEADY_INTERVAL_S = 0.25
-STEADY_EMPLOYEES_PER_FILE = 10
-STEADY_ACTIVITIES_PER_FILE = 30
 DRAIN_OUT_TIMEOUT_S = 30
+# cdc_steady publishes for PRE_ROLL_S before its measured window: the
+# first micro-batches of freshly started queries (planning, state-store
+# creation, then the catch-up batch) are set-up, not steady state. Their
+# files are published and checked but not sampled.
+PRE_ROLL_S = 5
 
 ENRICHED = ("employees_enriched", "activities_enriched")
 AGGREGATES = ("hourly_agg", "daily_agg")
@@ -160,9 +155,9 @@ def check_outputs(spark, emp_dir: str, act_dir: str, work_dir: str, lake: bool) 
 
 
 def prepare_drain(root: str, seed: int) -> tuple[str, str, int]:
-    emp_dir, act_dir = topic_dirs(os.path.join(root, "input"))
+    emp_dir, act_dir = topic_dirs(root)
     n = envelopes.write_backlog(
-        seed, emp_dir, act_dir, DRAIN_FILES, DRAIN_EMPLOYEES_PER_FILE, DRAIN_ACTIVITIES_PER_FILE
+        seed, emp_dir, act_dir, envelopes.DRAIN_FILES, *envelopes.file_mix(envelopes.DRAIN_ROWS_PER_FILE)
     )
     return emp_dir, act_dir, n["employees"] + n["activities"]
 
@@ -238,7 +233,7 @@ def measure_drain(ctx) -> dict:
 
 
 def offered_rows_per_s() -> float:
-    return (STEADY_EMPLOYEES_PER_FILE + STEADY_ACTIVITIES_PER_FILE) / STEADY_INTERVAL_S
+    return envelopes.STEADY_ROWS_PER_FILE / envelopes.STEADY_INTERVAL_S
 
 
 def measure_steady(ctx) -> dict:
@@ -253,6 +248,8 @@ def measure_steady(ctx) -> dict:
     with ctx.tracer.span("streaming.pipeline.CdcPipeline.start_memory_fanout"):
         orch = run_fanout(ctx.spark, emp_dir, act_dir, work, lake=False, available_now=False)
     start_ms = now_ms() + 1000  # let the four queries plan their first trigger
+    window_ms = start_ms + PRE_ROLL_S * 1000
+    emp_per_file, act_per_file = envelopes.file_mix(envelopes.STEADY_ROWS_PER_FILE)
     gen = subprocess.Popen(
         [
             sys.executable,
@@ -262,16 +259,16 @@ def measure_steady(ctx) -> dict:
             "--activities-dir", act_dir,
             "--staging-dir", staging,
             "--start-ms", str(start_ms),
-            "--seconds", str(ctx.seconds),
-            "--interval-s", str(STEADY_INTERVAL_S),
-            "--employees-per-file", str(STEADY_EMPLOYEES_PER_FILE),
-            "--activities-per-file", str(STEADY_ACTIVITIES_PER_FILE),
+            "--seconds", str(PRE_ROLL_S + ctx.seconds),
+            "--interval-s", str(envelopes.STEADY_INTERVAL_S),
+            "--employees-per-file", str(emp_per_file),
+            "--activities-per-file", str(act_per_file),
             "--log", gen_log,
         ]
     )
     try:
         with ctx.tracer.span("sources.generator"):
-            gen.wait(timeout=ctx.seconds + 30)
+            gen.wait(timeout=PRE_ROLL_S + ctx.seconds + 30)
     finally:
         if gen.poll() is None:
             gen.kill()
@@ -298,14 +295,16 @@ def measure_steady(ctx) -> dict:
     if orch.failed():
         raise RuntimeError(f"steady queries failed: {orch.failed()}")
 
-    # one sample per published file and sink: a file's rows share their
-    # due time and are read by one micro-batch, so they are one event
-    lat, unmapped, last_end = [], 0, start_ms
+    # one sample per file due in the window and sink: a file's rows share
+    # their due time and are read by one micro-batch, so they are one event
+    lat, unmapped, last_end, window_rows = [], 0, window_ms, 0
     for sink in ENRICHED:
-        files = sorted(set(sink_latency_rows(ctx.spark, sink, None)))
-        got, miss = settled_latencies(files, ctx.progress, sink)
-        lat.extend(got)
-        unmapped += miss
+        rows = sink_latency_rows(ctx.spark, sink, None)
+        window_rows += sum(due >= window_ms for due, _ in rows)
+        files = sorted(set(rows))
+        unmapped += settled_latencies(files, ctx.progress, sink)[1]
+        window = [f for f in files if f[0] >= window_ms]
+        lat.extend(stats.event_to_sink_latencies(window, ctx.progress.intervals(sink))[0])
         last_end = max([last_end] + [
             b["start_ms"] + b["durationMs"]["triggerExecution"]
             for b in ctx.progress.batches(sink) if b["numInputRows"]
@@ -323,14 +322,14 @@ def measure_steady(ctx) -> dict:
     late = [f["published_ms"] - f["due_ms"] for f in published]
     ctx.inputs = (emp_dir, act_dir, consumed_rows)
     return {
-        "rows_per_s": consumed_rows / ((last_end - start_ms) / 1000.0),
+        "rows_per_s": window_rows / ((last_end - window_ms) / 1000.0),
         "latency_p50_s": summary["p50"],
         "latency_tail_s": summary["tail"],
         "_info": {
             "event_to_sink_p50_s": summary["p50"],
             f"event_to_sink_p{summary['tail_pct']:g}_s": summary["tail"],
             "latency_samples_file_sink": summary["samples"],
-            "steady_rows_per_s": consumed_rows / ((last_end - start_ms) / 1000.0),
+            "steady_rows_per_s": window_rows / ((last_end - window_ms) / 1000.0),
             "offered_rows_per_s": offered_rows_per_s(),
             "generator_late_max_s": max(late) / 1000.0 if late else 0.0,
             "files_per_topic": len(published),

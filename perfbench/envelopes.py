@@ -21,10 +21,54 @@ import os
 import random
 
 EPOCH_MS = 1_704_067_200_000  # 2024-01-01T00:00:00Z
+
+# Key population, skew, disorder and op mix are synthetic choices (the
+# reference publishes none), each made so one path of the pipeline runs:
+# - EMPLOYEE_KEYS: bounded, so keys recur and the lake merges updates of
+#   known keys instead of only appending new ones;
+# - EMPLOYEE_SKEW: Zipf exponent of the key draws, so a few hot keys
+#   change often while most change rarely;
+# - DISORDER_SHARE / MAX_DISORDER_S: a bounded share of activities lag
+#   their stream position, so the aggregations update earlier windows,
+#   while every lag stays inside the 2-hour watermark and no row drops;
+# - ACTIVITY_UPDATE_SHARE / ACTIVITY_DELETE_SHARE: activity is mostly
+#   appends, with a few corrections and deletes that decode must handle.
 EMPLOYEE_KEYS = 2_000
-EMPLOYEE_SKEW = 1.1  # Zipf exponent of employee-key draws
-DISORDER_SHARE = 0.10  # share of activities whose event time lags
-MAX_DISORDER_S = 1_800  # lag bound, well inside the 2 h watermark
+EMPLOYEE_SKEW = 1.1
+DISORDER_SHARE = 0.10
+MAX_DISORDER_S = 1_800
+ACTIVITY_UPDATE_SHARE = 0.05
+ACTIVITY_DELETE_SHARE = 0.03
+
+# Traffic shape. The reference pipeline publishes no event rates or
+# mixes (only its 10-30 s trigger cadences), so these are synthetic
+# choices, the same in every workload:
+# - one employee change per fifteen activity events: activity is far
+#   more frequent than changes to employee records;
+# - cdc_drain: a backlog of DRAIN_FILES files of DRAIN_ROWS_PER_FILE
+#   envelopes (both topics together), read one file per trigger, so
+#   every query drains it in exactly DRAIN_FILES micro-batches, each large
+#   enough that per-row work shows next to the per-batch costs (three,
+#   so the median row lands inside the middle batch, not on the edge
+#   between two);
+# - cdc_steady: one file per topic every STEADY_INTERVAL_S with
+#   STEADY_ROWS_PER_FILE envelopes: 128 rows/s offered, about a sixth of
+#   the drain rate on a 4-core host, so reading keeps up with publishing
+#   and no backlog builds; four files a second give 80 latency samples
+#   in a 10 s window.
+EMPLOYEES_PER_ACTIVITY = 1 / 15
+DRAIN_FILES = 3
+DRAIN_ROWS_PER_FILE = 6_400
+WARM_UP_ROWS_PER_FILE = 640  # warm-up backlog: DRAIN_FILES files a tenth the size
+STEADY_INTERVAL_S = 0.25
+STEADY_ROWS_PER_FILE = 32
+
+
+def file_mix(rows: int) -> tuple[int, int]:
+    """(employee, activity) envelopes of a file of ``rows`` envelopes."""
+    emp = round(rows * EMPLOYEES_PER_ACTIVITY / (1 + EMPLOYEES_PER_ACTIVITY))
+    return emp, rows - emp
+
 
 _DEPTS = ("Engineering", "IT", "Sales", "Marketing", "HR", "Finance")
 _EMAILS = ("", "senior.", "lead.")
@@ -108,7 +152,12 @@ class EnvelopeSource:
             i = self._next_activity
             self._next_activity += 1
             r = self._rng.random()
-            op = "d" if r < 0.03 else ("u" if r < 0.08 else "c")
+            if r < ACTIVITY_DELETE_SHARE:
+                op = "d"
+            elif r < ACTIVITY_DELETE_SHARE + ACTIVITY_UPDATE_SHARE:
+                op = "u"
+            else:
+                op = "c"
             event_ms = ts_ms
             if self._rng.random() < DISORDER_SHARE:
                 event_ms -= self._rng.randrange(1, MAX_DISORDER_S) * 1000

@@ -5,7 +5,11 @@ event log on, the same measurement runs again under spans and job
 groups, and each layer is read off: streaming progress from the
 benchmark's own listener, prefix materializations for the decode /
 enrich / aggregate operators, a replay of the lake's upserts, and task
-metrics from the event log. Every run emits every metric; a layer the
+metrics from the event log. The catalog's layers (registry builders,
+the shared-leg cache and a task-metric fold per query group) come from
+the traced ``catalog_mix`` passes, and from one traced catalog pass that
+the traced ``cdc_steady`` run adds, so they are measured on a workload
+of the benchmark too. Every run emits every metric; a layer the
 workload does not exercise reads 0.
 """
 
@@ -15,6 +19,7 @@ import os
 import statistics
 import time
 
+import catalog
 import cdc
 import stats
 from tracing import Tracer, fold_event_log, now_ms, SPARK_FOLD_KEYS
@@ -69,6 +74,10 @@ UNITS: dict[str, str] = {
     "streaming.lake.write_amplification": "ratio",
     "streaming.lake.files_per_partition": "count",
     **{f"spark.pipeline.{k}": _SPARK_UNITS[k] for k in SPARK_FOLD_KEYS},
+    **{f"plans.registry.{g}.{k}": "s" for g in catalog.GROUPS for k in ("build_s", "exec_s")},
+    "plans.shared_leg.entries_published": "count",
+    "plans.shared_leg.hits": "count",
+    **{f"spark.{g}.{k}": _SPARK_UNITS[k] for g in catalog.GROUPS for k in SPARK_FOLD_KEYS},
     "streaming.single_core_drain_rows_per_s": "1/s",
     "tracing.rows_per_s_overhead": "1/s",
     "tracing.latency_p50_overhead_s": "s",
@@ -170,6 +179,34 @@ def lake_layers(spark, emp_dir: str, root: str, tracer) -> dict:
     }
 
 
+def catalog_layers(run, passes: list[list[dict]] | None = None) -> tuple[dict, dict]:
+    """Per-group builder and sink time and the shared-leg counters, per
+    pass (median over ``passes``), and each group's query windows in the
+    last pass for the event-log fold. Without ``passes``, generates the
+    catalog tables, runs the output checks (which also compile the
+    plans) and then one traced pass."""
+    if passes is None:
+        data_dir = os.path.join(run.root, "catalog-input")
+        catalog.write_tables(data_dir, run.seed)
+        with run.tracer.span("catalog.check"):
+            run.record_checks(catalog.check_outputs(run.spark, data_dir))
+        with run.tracer.span("catalog.pass"):
+            passes = [catalog.run_pass(run.spark, data_dir, run.tracer)]
+    out = {}
+    for g in catalog.GROUPS:
+        for k in ("build_s", "exec_s"):
+            out[f"plans.registry.{g}.{k}"] = statistics.median(
+                sum(r[k] for r in p if r["group"] == g) for p in passes
+            )
+    out["plans.shared_leg.entries_published"] = statistics.median(
+        sum(r["legs_published"] for r in p) for p in passes
+    )
+    out["plans.shared_leg.hits"] = statistics.median(sum(r["leg_hits"] for r in p) for p in passes)
+    windows = {g: [(r["start_ms"], r["end_ms"]) for r in passes[-1] if r["group"] == g]
+               for g in catalog.GROUPS}
+    return out, windows
+
+
 def traced(run, measure, untraced: dict, untraced_values: dict, out_dir: str) -> dict:
     """Run ``measure`` again under tracing and return every per-layer
     metric, plus ``_overhead``: traced minus untraced end-to-end values.
@@ -186,14 +223,13 @@ def traced(run, measure, untraced: dict, untraced_values: dict, out_dir: str) ->
     metrics = dict.fromkeys(UNITS, 0.0)
     metrics["session.get_session_s"] = run.launch_s
     metrics["jvm.peak_rss_mb"] = run.peak_rss_mb
-    if run.workload == "cdc_drain":
-        run.seconds = 0  # one traced drain
+    if run.workload != "cdc_steady":
+        run.seconds = 0  # one traced drain, two traced catalog passes
     start = now_ms()
     with run.tracer.span("measure", workload=run.workload):
         result = measure(run)
     end = now_ms()
     metrics.update(streaming_layers(run.progress))
-    emp_dir, act_dir = run.inputs[0], run.inputs[1]
     if run.workload == "cdc_steady":
         published = result["_published"]
         metrics["sources.generator_late_max_s"] = result["_info"]["generator_late_max_s"]
@@ -201,13 +237,22 @@ def traced(run, measure, untraced: dict, untraced_values: dict, out_dir: str) ->
             stats.backlog_max_rows(published, run.progress.batches(q), field)
             for q, field in (("employees_enriched", "employees"), ("activities_enriched", "activities"))
         )
-    metrics.update(prefix_layers(run.spark, emp_dir, act_dir, run.tracer))
-    if run.workload == "cdc_drain":
-        metrics.update(lake_layers(run.spark, emp_dir, run.root, run.tracer))
+    windows = {"pipeline": [(start, end)]}
+    if run.workload == "catalog_mix":
+        cat, groups = catalog_layers(run, result["_passes"])
+    else:
+        emp_dir, act_dir = run.inputs[0], run.inputs[1]
+        metrics.update(prefix_layers(run.spark, emp_dir, act_dir, run.tracer))
+        if run.workload == "cdc_drain":
+            metrics.update(lake_layers(run.spark, emp_dir, run.root, run.tracer))
+        cat, groups = catalog_layers(run) if run.workload == "cdc_steady" else ({}, {})
+    metrics.update(cat)
+    windows.update(groups)
     run.progress.detach(run.spark)
     run.spark.stop()  # flushes the event log
-    fold = fold_event_log(log_dir, start, end, run.cores)
-    metrics.update({f"spark.pipeline.{k}": v for k, v in fold.items()})
+    fold = fold_event_log(log_dir, windows, run.cores)
+    for name, totals in fold.items():
+        metrics.update({f"spark.{name}.{k}": v for k, v in totals.items()})
     if run.workload == "cdc_drain":
         run.start_session(master="local[1]")
         with run.tracer.span("single_core_drain"):

@@ -1,9 +1,9 @@
 """Benchmark entry point for the CDC pipeline engine.
 
-    python3 perfbench/run.py --workload cdc_drain --seed 1 --seconds 8 --trace 0
+    python3 perfbench/run.py --workload cdc_drain --seed 1 --seconds 10 --trace 0
 
-Runs one workload (``cdc_drain`` or ``cdc_steady``) on inputs
-generated from ``--seed``, measures for about ``--seconds``,
+Runs one workload (``cdc_drain``, ``cdc_steady`` or ``catalog_mix``) on
+inputs generated from ``--seed``, measures for about ``--seconds``,
 checks the program's outputs and prints, as the last line of standard
 output, one JSON object: ``correct``, ``attempted``, ``failed`` and
 ``metrics`` (every end-to-end metric with ``--trace 0``, every per-layer
@@ -24,7 +24,6 @@ import json
 import os
 import shutil
 import signal
-import statistics
 import sys
 import tempfile
 import time
@@ -37,6 +36,7 @@ sys.path.insert(0, REPO)
 # The package reads it when first imported, so it is set before that.
 os.environ["SPARK_GRAFT_CPUS"] = str(len(os.sched_getaffinity(0)))
 
+import catalog  # noqa: E402
 import cdc  # noqa: E402
 import envelopes  # noqa: E402
 import layers  # noqa: E402
@@ -46,11 +46,10 @@ from streaming_pipeline___spark_stream_and_kafla_for_cassendra_spark import (  #
     get_session,
 )
 
-WORKLOADS = ("cdc_drain", "cdc_steady")
+WORKLOADS = ("cdc_drain", "cdc_steady", "catalog_mix")
 END_TO_END = ("setup_s", "retained_mb", "rows_per_s", "latency_p50_s", "latency_tail_s")
 UNITS = {"setup_s": "s", "retained_mb": "MB", "rows_per_s": "1/s",
          "latency_p50_s": "s", "latency_tail_s": "s"}
-SETUP_REPS = 3
 
 
 class Run:
@@ -141,21 +140,28 @@ def stop_jvm(run: Run) -> None:
 # -- workload steps ----------------------------------------------------------
 
 
-def prepare(run: Run, rep: int):
-    """Per-setup input generation (steady makes its input while running)."""
-    d = os.path.join(run.root, f"setup-{rep}")
+def prepare(run: Run):
+    """Input generation (steady makes its input while running)."""
+    d = os.path.join(run.root, "input")
     if run.workload == "cdc_drain":
         return cdc.prepare_drain(d, run.seed)
+    if run.workload == "catalog_mix":
+        return d, catalog.write_tables(d, run.seed)
     return None
 
 
 def warm_up(run: Run) -> None:
-    """Compile and JIT the pipeline's plans on a small backlog with as
-    many micro-batches as the measured drain, so the lake's merge path
-    and the state stores' reload from a previous version run too."""
+    """Compile and JIT the measured plans once before timing: the CDC
+    workloads drain a small backlog in as many micro-batches as the
+    measured drain (so the lake's merge path and the state stores' reload
+    from a previous version run too); the catalog runs one pass."""
+    if run.workload == "catalog_mix":
+        catalog.run_pass(run.spark, run.inputs[0], run.tracer)
+        return
     d = os.path.join(run.root, "warm-up")
     emp_dir, act_dir = cdc.topic_dirs(os.path.join(d, "input"))
-    envelopes.write_backlog(run.seed + 1, emp_dir, act_dir, cdc.DRAIN_FILES, 40, 300)
+    envelopes.write_backlog(run.seed + 1, emp_dir, act_dir, envelopes.DRAIN_FILES,
+                            *envelopes.file_mix(envelopes.WARM_UP_ROWS_PER_FILE))
     cdc.drain_once(run.spark, emp_dir, act_dir, d, run.progress, run.tracer,
                    lake=run.workload == "cdc_drain")
 
@@ -163,10 +169,15 @@ def warm_up(run: Run) -> None:
 def measure(run: Run) -> dict:
     if run.workload == "cdc_drain":
         return cdc.measure_drain(run)
+    if run.workload == "catalog_mix":
+        return catalog.measure(run)
     return cdc.measure_steady(run)
 
 
 def check(run: Run, result: dict) -> None:
+    if run.workload == "catalog_mix":
+        run.record_checks(catalog.check_outputs(run.spark, run.inputs[0]))
+        return
     work = result["_info"]["last_work_dir"]
     emp_dir, act_dir = run.inputs[0], run.inputs[1]
     run.record_checks(
@@ -175,21 +186,16 @@ def check(run: Run, result: dict) -> None:
 
 
 def setup(run: Run) -> float:
-    """JVM launch and session, then SETUP_REPS session restarts with input
-    generation, then warm-up. setup_s = launch + median rep + warm-up."""
-    launch = run.start_session()
-    reps = []
-    for rep in range(SETUP_REPS):
-        t0 = time.perf_counter()
-        run.restart_session()
-        run.inputs = prepare(run, rep)
-        reps.append(time.perf_counter() - t0)
+    """One pass of JVM launch and session, input generation and warm-up."""
     t0 = time.perf_counter()
+    run.launch_s = run.start_session()
+    t1 = time.perf_counter()
+    run.inputs = prepare(run)
+    t2 = time.perf_counter()
     warm_up(run)
-    warm = time.perf_counter() - t0
-    run.launch_s = launch
-    run.phases.update(launch_s=launch, prepare_s=reps, warm_up_s=warm)
-    return launch + statistics.median(reps) + warm
+    t3 = time.perf_counter()
+    run.phases.update(launch_s=t1 - t0, prepare_s=t2 - t1, warm_up_s=t3 - t2)
+    return t3 - t0
 
 
 def retained_mb(run: Run) -> float:
@@ -221,7 +227,9 @@ def main() -> int:
     root = tempfile.mkdtemp(prefix=f"{args.workload}-", dir=tmp_base)
     for sub in ("tmp", "spark-local"):
         os.makedirs(os.path.join(root, sub))
-    # fresh per run: the shared-leg cache lives under TMPDIR
+    # fresh per run: temporary files, Spark's scratch space and the
+    # catalog's shared-leg cache (which lives under TMPDIR) start empty
+    # and are never shared with another process
     os.environ["TMPDIR"] = os.path.join(root, "tmp")
     tempfile.tempdir = None
     os.environ["SPARK_LOCAL_DIRS"] = os.path.join(root, "spark-local")

@@ -7,13 +7,16 @@ from __future__ import annotations
 
 import datetime as dt
 import json
+import math
 import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+import catalog  # noqa: E402
 import envelopes  # noqa: E402
 import stats  # noqa: E402
+import tracing  # noqa: E402
 
 
 def _backlog_bytes(tmp_path, tag, seed):
@@ -126,3 +129,65 @@ def test_backlog_counts_published_but_unread_rows():
         {"start_ms": 350, "numInputRows": 30},  # 40 available, 30 unread
     ]
     assert stats.backlog_max_rows(published, batches, "rows") == 30
+
+
+def test_catalog_tables_follow_the_seed(tmp_path):
+    counts = catalog.write_tables(str(tmp_path / "one"), 5)
+    catalog.write_tables(str(tmp_path / "two"), 5)
+    catalog.write_tables(str(tmp_path / "other"), 6)
+    for name in counts:
+        one = (tmp_path / "one" / f"{name}.parquet").read_bytes()
+        assert one == (tmp_path / "two" / f"{name}.parquet").read_bytes()
+    assert (tmp_path / "one" / "lineitem.parquet").read_bytes() != (
+        tmp_path / "other" / "lineitem.parquet"
+    ).read_bytes()
+
+
+def test_fingerprint_ignores_row_and_column_order_and_flags_a_change():
+    rows = [(1, 0.123456789, "a"), (2, None, "b")]
+    base = catalog.fingerprint(["id", "x", "s"], rows)
+    assert base[0] == 2
+    reordered = [(r[2], r[0], r[1]) for r in reversed(rows)]
+    assert catalog.fingerprint(["s", "id", "x"], reordered) == base
+    assert catalog.fingerprint(["id", "x", "s"], [(1, 0.1234568, "a"), rows[1]]) == base
+    assert catalog.fingerprint(["id", "x", "s"], [(1, 0.1235, "a"), rows[1]]) != base
+    assert catalog.fingerprint(["id", "x", "s"], rows[:1])[0] == 1
+
+
+def test_shared_leg_changes_count_publishes_and_hits():
+    before = {"a": 10, "b": 20}
+    after = {"a": 10, "b": 25, "c": 30}
+    assert catalog.leg_changes(before, after) == (1, 1)
+    assert catalog.leg_changes({}, {}) == (0, 0)
+
+
+def test_event_log_fold_splits_by_window(tmp_path):
+    def job(jid, t, stages):
+        return {"Event": "SparkListenerJobStart", "Job ID": jid, "Submission Time": t,
+                "Stage IDs": stages}
+
+    def task(stage, run_ms, py_ms=0):
+        accs = [{"Name": "time to run Python workers", "Update": str(py_ms)}] if py_ms else []
+        return {"Event": "SparkListenerTaskEnd", "Stage ID": stage,
+                "Task Info": {"Accumulables": accs},
+                "Task Metrics": {"Executor Run Time": run_ms, "Executor CPU Time": run_ms * 10**6}}
+
+    log = tmp_path / "app"
+    log.mkdir()
+    events = [job(0, 1_000, [0]), task(0, 400), job(1, 5_000, [1, 2]), task(1, 200, py_ms=150),
+              task(2, 100), job(2, 9_000, [3]), task(3, 999)]
+    (log / "events_1").write_text("\n".join(json.dumps(e) for e in events) + "\n")
+    (log / ".events_1.crc").write_text("crc")
+    fold = tracing.fold_event_log(str(tmp_path), {"a": [(0, 2_000)], "b": [(4_000, 6_000)]}, cores=1)
+    assert fold["a"]["jobs"] == 1 and fold["a"]["tasks"] == 1
+    assert fold["b"]["jobs"] == 1 and fold["b"]["tasks"] == 2
+    assert math.isclose(fold["b"]["executor_run_s"], 0.3)
+    assert math.isclose(fold["b"]["python_worker_s"], 0.15)
+    assert math.isclose(fold["a"]["task_slot_util"], 0.2)
+
+
+def test_one_mix_in_every_file():
+    for rows in (envelopes.DRAIN_ROWS_PER_FILE, envelopes.WARM_UP_ROWS_PER_FILE,
+                 envelopes.STEADY_ROWS_PER_FILE):
+        emp, act = envelopes.file_mix(rows)
+        assert emp + act == rows and act == 15 * emp

@@ -191,57 +191,64 @@ SPARK_FOLD_KEYS = (
     "task_slot_util",
 )
 
-# SQL-metric accumulables that time Python worker execution (Arrow /
-# pandas UDFs, applyInPandasWithState), in milliseconds.
-_PYTHON_TIME_ACCUMULABLES = ("time spent executing", "time spent running python")
+# SQL timing metric (milliseconds, per task) of the Python-worker
+# operators (mapInPandas, Arrow / pandas UDFs, applyInPandasWithState).
+# Their worker start and initialization timers are left out: they
+# overlap the run timer and can exceed the task's own run time.
+_PYTHON_RUN_ACCUMULABLE = "time to run python workers"
 
 
-def fold_event_log(log_dir: str, start_ms: int, end_ms: int, cores: int) -> dict:
-    """Task-metric totals from the Spark event log in ``log_dir`` for the
-    jobs submitted between ``start_ms`` and ``end_ms``; a task counts
-    toward its stage's job."""
+def _fold(events: list[dict], windows: list[tuple[int, int]], cores: int) -> dict:
     out = dict.fromkeys(SPARK_FOLD_KEYS, 0.0)
     stages: set[int] = set()
+    for ev in events:
+        kind = ev.get("Event")
+        if kind == "SparkListenerJobStart":
+            t = ev.get("Submission Time", 0)
+            if any(a <= t <= b for a, b in windows):
+                out["jobs"] += 1
+                stages.update(ev.get("Stage IDs", []))
+        elif kind == "SparkListenerTaskEnd":
+            m = ev.get("Task Metrics")
+            if ev.get("Stage ID") not in stages or not m:
+                continue
+            out["tasks"] += 1
+            out["executor_run_s"] += m.get("Executor Run Time", 0) / 1e3
+            out["executor_cpu_s"] += m.get("Executor CPU Time", 0) / 1e9
+            out["jvm_gc_s"] += m.get("JVM GC Time", 0) / 1e3
+            out["spill_bytes"] += m.get("Memory Bytes Spilled", 0) + m.get("Disk Bytes Spilled", 0)
+            sr = m.get("Shuffle Read Metrics", {})
+            out["shuffle_read_bytes"] += sr.get("Remote Bytes Read", 0) + sr.get("Local Bytes Read", 0)
+            out["shuffle_write_bytes"] += m.get("Shuffle Write Metrics", {}).get("Shuffle Bytes Written", 0)
+            for acc in (ev.get("Task Info") or {}).get("Accumulables", []):
+                name = (acc.get("Name") or "").lower()
+                if name == _PYTHON_RUN_ACCUMULABLE:
+                    try:
+                        out["python_worker_s"] += float(acc.get("Update", 0)) / 1e3
+                    except (TypeError, ValueError):
+                        pass
+    span_s = sum(b - a for a, b in windows) / 1e3
+    if span_s > 0:
+        out["task_slot_util"] = out["executor_run_s"] / (span_s * cores)
+    return out
+
+
+def fold_event_log(log_dir: str, windows: dict[str, list[tuple[int, int]]], cores: int) -> dict:
+    """Task-metric totals from the Spark event log in ``log_dir``, one
+    fold per name in ``windows``: the jobs submitted inside any of that
+    name's ``(start_ms, end_ms)`` windows, a task counting toward its
+    stage's job. ``task_slot_util`` is executor run time over the
+    windows' total length times ``cores``."""
     # Spark 4 writes a rolling log: one directory of event files per app
     files = sorted(
         os.path.join(d, f) for d, _, names in os.walk(log_dir) for f in names
         if not f.startswith(".")
     )
+    events = []
     for path in files:
         with open(path) as fh:
             for line in fh:
                 ev = json.loads(line)
-                kind = ev.get("Event")
-                if kind == "SparkListenerJobStart":
-                    if start_ms <= ev.get("Submission Time", 0) <= end_ms:
-                        out["jobs"] += 1
-                        stages.update(ev.get("Stage IDs", []))
-                elif kind == "SparkListenerTaskEnd":
-                    m = ev.get("Task Metrics")
-                    if ev.get("Stage ID") not in stages or not m:
-                        continue
-                    out["tasks"] += 1
-                    out["executor_run_s"] += m.get("Executor Run Time", 0) / 1e3
-                    out["executor_cpu_s"] += m.get("Executor CPU Time", 0) / 1e9
-                    out["jvm_gc_s"] += m.get("JVM GC Time", 0) / 1e3
-                    out["spill_bytes"] += m.get("Memory Bytes Spilled", 0) + m.get(
-                        "Disk Bytes Spilled", 0
-                    )
-                    sr = m.get("Shuffle Read Metrics", {})
-                    out["shuffle_read_bytes"] += sr.get("Remote Bytes Read", 0) + sr.get(
-                        "Local Bytes Read", 0
-                    )
-                    out["shuffle_write_bytes"] += m.get("Shuffle Write Metrics", {}).get(
-                        "Shuffle Bytes Written", 0
-                    )
-                    for acc in (ev.get("Task Info") or {}).get("Accumulables", []):
-                        name = (acc.get("Name") or "").lower()
-                        if name.startswith(_PYTHON_TIME_ACCUMULABLES):
-                            try:
-                                out["python_worker_s"] += float(acc.get("Update", 0)) / 1e3
-                            except (TypeError, ValueError):
-                                pass
-    span_s = (end_ms - start_ms) / 1e3
-    if span_s > 0:
-        out["task_slot_util"] = out["executor_run_s"] / (span_s * cores)
-    return out
+                if ev.get("Event") in ("SparkListenerJobStart", "SparkListenerTaskEnd"):
+                    events.append(ev)
+    return {name: _fold(events, w, cores) for name, w in windows.items()}
