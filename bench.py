@@ -16,17 +16,27 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from streaming_pipeline___spark_stream_and_kafla_for_cassendra_spark import get_session
+from streaming_pipeline___spark_stream_and_kafla_for_cassendra_spark.plans import legs
 from streaming_pipeline___spark_stream_and_kafla_for_cassendra_spark.plans.registry import (
     CACHE_BACKED_QUERIES,
     REGISTRY,
-    _shared_leg_cache_root,
-    clear_shared_leg_cache,
 )
+
+
+def _slowest_queries(path: str, n: int = 10) -> list[str]:
+    """The ``n`` slowest queries of a previous bench artifact's
+    ``queries`` map; empty when there is no readable artifact."""
+    try:
+        with open(path) as fh:
+            prev = json.load(fh)["queries"]
+        return sorted(prev, key=lambda q: -prev[q])[:n]
+    except (OSError, ValueError, KeyError, TypeError):
+        return []
 
 
 def _leg_entries() -> int:
     """Number of materialized shared-leg cache entries right now."""
-    root = _shared_leg_cache_root()
+    root = legs.root()
     try:
         return sum(
             os.path.isdir(os.path.join(root, e)) for e in os.listdir(root)
@@ -367,7 +377,7 @@ def main() -> None:
         qd = by_name[name]
         if coldwarm and name in CACHE_BACKED_QUERIES:
             try:
-                clear_shared_leg_cache()
+                legs.clear()
                 t0 = time.perf_counter()
                 materialize(qd.builder(spark, SF_DIR))
                 cold = time.perf_counter() - t0
@@ -569,6 +579,7 @@ def main() -> None:
     report_path = os.environ.get("SPARK_GRAFT_BENCH_OUT") or os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "BENCH_LOCAL_LATEST.json"
     )
+    prev_inline = _slowest_queries(report_path)
     try:
         with open(report_path, "w") as fh:
             json.dump(full, fh, indent=1, sort_keys=True)
@@ -584,25 +595,14 @@ def main() -> None:
                 {n: v["corrected"] for n, v in sorted(corrected.items())}
             ),
         )
-    # The inline map carries the 10 slowest queries PLUS last round's
-    # inline set (VERDICT r8 #6): the round-over-round comparator
+    # The inline map carries the 10 slowest queries PLUS the 10
+    # slowest of the previous artifact, read before it is overwritten
+    # (VERDICT r8 #6): the round-over-round comparator
     # diffs the inline maps, so a query that leaves the top-10
     # because it was OPTIMIZED otherwise reads as "dropped" (6 false
     # drops in r8). Union keeps every previously-reported query
     # visible with its new (faster) number. ADD-only per the driver
     # contract — nothing is removed or renamed.
-    prev_inline = [
-        "zorder_pruning_audit",
-        "textrank_keywords_documents",
-        "max_coverage_doc_selection",
-        "lsh_blocking_quality",
-        "streaming_sessionize_events",
-        "nelson_aalen_hazard",
-        "hurst_rs_daily_revenue",
-        "jaccard_prefix_filter_pairs",
-        "ann_ivf_indexed_recall_floor",
-        "uplift_by_segment_events",
-    ]
     inline = dict(sorted(timings.items(), key=lambda kv: -kv[1])[:10])
     for name in prev_inline:
         if name in timings:

@@ -39,6 +39,8 @@ from ..functions.text import (
     token_count,
     tokens,
 )
+from . import legs as _legs
+from .legs import clear as clear_shared_leg_cache  # noqa: F401
 
 
 def _langid_oracle() -> str:
@@ -1227,72 +1229,17 @@ def ngram_jaccard_pairs_q(spark, sf_dir):
 # catalog's sf1 sweep (~150 s × 4 redundant recomputes); at 100 TB a
 # pipeline materializes the pair graph once and derives every report
 # from it. This helper is that materialized shared intermediate,
-# served through the plan-fingerprint ResultCache: the key binds the
-# mining parameters, the SOURCE of the whole mining module (any
-# implementation change invalidates), and the (path, mtime, size) of
-# every input file (any data change invalidates) — correctness never
-# depends on manual invalidation. Since r7 the headline
-# ``ngram_jaccard_pairs`` query reads the leg too (VERDICT r6 #1:
-# the sf1 sweep paid the ~150 s mining leg twice — once live, once
-# for the first derived query's materialization). The miner's own
-# plan stays covered by tests/test_mining_guard.py and the operator
-# suite; the family was already HEAVY_BUILDERS-listed in the plan
-# sweep (the pre-flight histogram executes at build).
+# served through the shared-leg cache (plans/legs.py), whose derived
+# key invalidates on any input-file or package-source change. Since
+# r7 the headline ``ngram_jaccard_pairs`` query reads the leg too
+# (VERDICT r6 #1: the sf1 sweep paid the ~150 s mining leg twice —
+# once live, once for the first derived query's materialization). The
+# miner's own plan stays covered by tests/test_mining_guard.py and the
+# operator suite; the family was already HEAVY_BUILDERS-listed in the
+# plan sweep (the pre-flight histogram executes at build).
 _NGRAM_LEG_PARAMS = dict(
     shingle_n=3, threshold=0.2, max_gram_df=256, candidate_budget=50_000_000
 )
-
-
-def _shared_leg_cache_root() -> str:
-    """Per-user, 0700 shared-leg cache root (ADVICE r6 hardening).
-
-    The old root was a PREDICTABLE path in the world-writable
-    tempdir; on a multi-user host another user could squat the
-    directory (permission-breaking every run) or pre-publish an
-    entry whose ``_committed`` marker ``lookup()`` trusts — serving
-    attacker-controlled parquet as query results. Suffixing the uid,
-    forcing mode 0700, and refusing a root we don't own closes both:
-    only this user can create entries the cache will read."""
-    import os
-    import tempfile
-
-    root = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_shared_legs-{os.getuid()}"
-    )
-    os.makedirs(root, mode=0o700, exist_ok=True)
-    st = os.stat(root)
-    if st.st_uid != os.getuid():
-        raise RuntimeError(
-            f"shared-leg cache root {root} is owned by uid {st.st_uid}, "
-            "not the current user — refusing to trust its entries"
-        )
-    if st.st_mode & 0o077:
-        os.chmod(root, 0o700)
-    return root
-
-
-def _prune_shared_legs(root: str, keep: int = 64) -> None:
-    """Entries accumulate as input mtimes change (every fixture
-    regeneration mints a new fingerprint); bound the root to the
-    ``keep`` most-recently-used entries. mtime of the entry dir is
-    bumped on publish, so eviction order is publish order — stale
-    fingerprints (whose inputs changed) age out naturally."""
-    import os
-    import shutil
-
-    try:
-        entries = [
-            os.path.join(root, e)
-            for e in os.listdir(root)
-            if os.path.isdir(os.path.join(root, e))
-        ]
-    except OSError:  # pragma: no cover - root vanished mid-run
-        return
-    if len(entries) <= keep:
-        return
-    entries.sort(key=lambda p: os.path.getmtime(p))
-    for p in entries[: len(entries) - keep]:
-        shutil.rmtree(p, ignore_errors=True)
 
 
 #: Queries served (fully or for their dominant leg) from the
@@ -1323,95 +1270,24 @@ CACHE_BACKED_QUERIES = frozenset(
 )
 
 
-def clear_shared_leg_cache() -> None:
-    """Drop every materialized shared leg (bench cold runs; tests).
+def _mine_ngram_pairs(docs):
+    from ..operators import dedup as _dd
 
-    Read-safety on a shared box (ADVICE r7): a concurrent sweep in
-    another process may hold a lazily-evaluated DataFrame over an
-    entry in this root — rmtree'ing it mid-read turns that process's
-    query into FileNotFoundException. Set
-    ``SPARK_GRAFT_LEG_CACHE_NO_CLEAR=1`` in the side-running sweep's
-    environment and clears become no-ops for it; the bench's own
-    cold/warm protocol (the only in-repo caller outside tests) keeps
-    clearing in its own dedicated runs."""
-    import shutil
-
-    if os.environ.get("SPARK_GRAFT_LEG_CACHE_NO_CLEAR") == "1":
-        return
-    shutil.rmtree(_shared_leg_cache_root(), ignore_errors=True)
-
-
-def _materialized_leg(spark, tag, input_df, src_objs, thunk):
-    """Generic fingerprint-keyed shared intermediate (the engine's
-    answer to a repeated subplan across catalog queries — compute
-    once, derive many reports).
-
-    Key = ``tag`` (version + parameters, bump to force a rebuild)
-    + the SOURCE of every object in ``src_objs`` (any implementation
-    change invalidates) + the (path, mtime_ns, size) of every input
-    file of ``input_df`` (any data change invalidates). Un-stattable
-    inputs are never cached — same contract as
-    ``ResultCache.fingerprint``. ``thunk`` builds the leg only on a
-    miss."""
-    import hashlib
-    import inspect
-    import os
-
-    from .result_cache import ResultCache
-
-    h = hashlib.md5()
-    h.update(tag.encode())
-    h.update(b"|")
-    for obj in src_objs:
-        h.update(inspect.getsource(obj).encode())
-    uris = input_df.inputFiles()
-    if not uris:
-        # A cached/in-memory or otherwise scan-less frame reports NO
-        # input files; hashing nothing would mint one key for every
-        # dataset (r9: a .cache()d join frame served sf0.1 factors to
-        # an sf0.001 run). No files visible -> never cache.
-        return thunk()
-    files = []
-    for uri in uris:
-        p = uri[len("file:"):] if uri.startswith("file:") else uri
-        try:
-            st = os.stat(p)
-        except OSError:  # un-stattable input: never cache
-            return thunk()
-        files.append((p, st.st_mtime_ns, st.st_size))
-    for rec in sorted(files):
-        h.update(repr(rec).encode())
-    root = _shared_leg_cache_root()
-    cache = ResultCache(path=root)
-    res, _hit = cache.get_or_materialize(spark, h.hexdigest(), thunk)
-    if not _hit:
-        _prune_shared_legs(root)
-    return res
+    return _dd.ngram_jaccard_pairs(
+        docs, "text", "doc_id", **_NGRAM_LEG_PARAMS
+    )
 
 
 def _ngram_pair_leg(spark, sf_dir):
-    # src_objs carries the TRANSITIVE implementation closure (ADVICE
-    # r6): the miner's tokenize/shingle primitives live in
-    # functions/text.py — an edit there changes the mined pair graph,
-    # so it must invalidate the cache exactly like a dedup.py edit.
-    from ..functions import text as _tx
     from ..operators import dedup as _dd
 
-    d = _t(spark, sf_dir, "documents")
     # LAST_MINING_PLAN observability survives the cache: on a miss the
-    # thunk's pre-flight records its decision as usual; on a hit no
+    # build's pre-flight records its decision as usual; on a hit no
     # pre-flight ran, and leaving a STALE decision visible would lie
     # to tools reading it — record the hit explicitly instead.
     _dd.LAST_MINING_PLAN = None
-    res = _materialized_leg(
-        spark,
-        "ngram-pair-leg-v1|" + repr(sorted(_NGRAM_LEG_PARAMS.items())),
-        d,
-        [_dd, _tx],
-        lambda: _dd.ngram_jaccard_pairs(
-            d, "text", "doc_id", **_NGRAM_LEG_PARAMS
-        ),
-    )
+    docs = _t(spark, sf_dir, "documents")
+    res = _legs.leg(spark, docs, _mine_ngram_pairs)
     if _dd.LAST_MINING_PLAN is None:
         _dd.LAST_MINING_PLAN = {
             "path": "served-from-shared-leg-cache",
@@ -1457,8 +1333,8 @@ def _ngram_pair_leg(spark, sf_dir):
     "to the minimum doc_id of its component; oracle is a recursive-"
     "CTE reachability fixpoint over the same edge set. The pair graph "
     "is served from the materialized shared mining leg "
-    "(_ngram_pair_leg: fingerprint-keyed ResultCache, invalidated by "
-    "any input-file or miner-source change) — the four downstream "
+    "(_ngram_pair_leg: shared-leg cache, invalidated by any input-"
+    "file or package-source change) — the four downstream "
     "dedup reports reuse one mining run instead of four",
     ("dedup", "clustering", "iterative", "documents"),
 )
@@ -9891,28 +9767,22 @@ def _bpe_token_counts_oracle() -> str:
 # encode is one Arrow pass. Guide §5 (reused AND expensive): the
 # merge table is the shared intermediate — Heaps-law sized (25 rows
 # here), so the leg is KB-sized while the saved recompute is the
-# whole trainer. Same fingerprint-keyed shared-leg machinery as the
-# ngram pair leg: the key binds the trainer params, the SOURCE of
-# functions/bpe.py + functions/text.py (tokenization feeds the word
-# table), and the (path, mtime, size) of the corpus files — any
-# change re-trains.
+# whole trainer. It is served through the shared-leg cache like the
+# ngram pair leg: any corpus-file or package-source change re-trains.
 _BPE_LEG_PARAMS = dict(num_merges=25)
 
 
-def _bpe_merges_leg(spark, sf_dir):
+def _train_bpe_merges(docs):
     from ..functions import bpe as _bpe
-    from ..functions import text as _tx
 
-    d = _t(spark, sf_dir, "documents")
-    return _materialized_leg(
-        spark,
-        "bpe-merges-leg-v1|" + repr(sorted(_BPE_LEG_PARAMS.items())),
-        d,
-        [_bpe, _tx],
-        lambda: _bpe.merges_df(
-            spark, _bpe.bpe_train(d, "text", **_BPE_LEG_PARAMS)
-        ),
+    return _bpe.merges_df(
+        docs.sparkSession, _bpe.bpe_train(docs, "text", **_BPE_LEG_PARAMS)
     )
+
+
+def _bpe_merges_leg(spark, sf_dir):
+    docs = _t(spark, sf_dir, "documents")
+    return _legs.leg(spark, docs, _train_bpe_merges)
 
 
 def _bpe_merges_list(spark, sf_dir):

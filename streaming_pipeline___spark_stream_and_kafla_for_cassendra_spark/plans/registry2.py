@@ -27,6 +27,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..operators.joins import asof_join, interval_overlap_join
+from . import legs as _legs
 from .registry import _kmeans_chain_ctes, _register, _t
 
 _KMEANS_ORACLE = f"""
@@ -1945,40 +1946,30 @@ def _als_oracle_sql_cached() -> str | None:
 # MEAN-CENTERED ratings (different algebra, so the factor tables are
 # distinct). Guide §5 (reused AND expensive): the trained factors are
 # entity-count-sized (KBs per million entities at rank 8) while the
-# trainer is the whole cost, so each variant's factors go through the
-# fingerprint-keyed shared-leg cache — the key binds the variant tag,
-# the SOURCE of operators/als.py, and the (path, mtime, size) of the
-# lineitem/orders inputs; parquet round-trips float64 arrays exactly,
-# so served factors are bit-identical to freshly trained ones.
-def _als_factors_leg(spark, ratings, fingerprint_df, variant):
-    """``fingerprint_df`` must be an UNCACHED frame over the raw
-    scans: ``.cache()`` swaps in an InMemoryRelation whose
-    ``inputFiles()`` is empty, which would key the leg independently
-    of the dataset (the r9 test-suite catch)."""
+# trainer is the whole cost, so the factors go through the shared-leg
+# cache, keyed by the ratings frame itself: its plan carries the
+# ratings prep (log1p, mean-centering), its scans the input files;
+# parquet round-trips float64 arrays exactly, so served factors are
+# bit-identical to freshly trained ones.
+def _train_als_factors(ratings):
     from ..operators import als as _als
-    from .registry import _materialized_leg
 
-    def thunk():
-        user_f, item_f = _als.als_train(ratings, rank=8, iterations=2)
-        return user_f.select(
-            F.lit("u").alias("side"),
-            F.col("user_id").alias("eid"),
+    user_f, item_f = _als.als_train(ratings, rank=8, iterations=2)
+    return user_f.select(
+        F.lit("u").alias("side"),
+        F.col("user_id").alias("eid"),
+        "factors",
+    ).unionByName(
+        item_f.select(
+            F.lit("i").alias("side"),
+            F.col("item_id").alias("eid"),
             "factors",
-        ).unionByName(
-            item_f.select(
-                F.lit("i").alias("side"),
-                F.col("item_id").alias("eid"),
-                "factors",
-            )
         )
-
-    both = _materialized_leg(
-        spark,
-        f"als-factors-leg-v1|rank=8|iterations=2|{variant}",
-        fingerprint_df,
-        [_als],
-        thunk,
     )
+
+
+def _als_factors_leg(spark, ratings):
+    both = _legs.leg(spark, ratings, _train_als_factors)
     user_f = both.filter(F.col("side") == "u").select(
         F.col("eid").alias("user_id"), "factors"
     )
@@ -2019,12 +2010,7 @@ def als_recommend_parts(spark, sf_dir):
         )
         .agg(F.log1p(F.sum("l_quantity")).alias("rating"))
     ).cache()
-    user_f, item_f = _als_factors_leg(
-        spark,
-        ratings,
-        li.join(o, li["l_orderkey"] == o["o_orderkey"]),
-        "raw",
-    )
+    user_f, item_f = _als_factors_leg(spark, ratings)
     cohort = user_f.filter(F.col("user_id") % 300 == 0)
     recs = als_recommend(
         cohort, item_f, ratings.select("user_id", "item_id"), k=3

@@ -90,8 +90,7 @@ def _lru_step_sql() -> str:
     "hit counts roll up per market segment in ppm. One shuffle on "
     "custkey with per-customer arrays bounded by customer "
     "activity; the temporal-locality companion to "
-    "`customer_order_intervals` (recency gaps) and the cache "
-    "cousin of `result_cache`'s plan-level memoization.",
+    "`customer_order_intervals` (recency gaps).",
     ("systems", "cache", "recurrence", "lineitem"),
 )
 def lru_cache_hit_rate(spark, sf_dir):

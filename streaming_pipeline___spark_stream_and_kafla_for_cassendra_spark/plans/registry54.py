@@ -244,17 +244,9 @@ def als_rmse_floor(spark, sf_dir):
     centered = ratings.withColumn(
         "rating", F.col("rating") - F.lit(float(mu))
     )
-    # "centered" leg variant: mu is itself a deterministic function of
-    # the same input files the leg fingerprint stats, so keying the
-    # cached factors by (variant, als.py source, file stats) is sound.
-    # The fingerprint frame is the UNCACHED join (a .cache()d frame
-    # reports no input files and would collapse the key across SFs).
-    user_f, item_f = _als_factors_leg(
-        spark,
-        centered,
-        li.join(o, li["l_orderkey"] == o["o_orderkey"]),
-        "centered",
-    )
+    # mu enters the centered frame's plan as a literal, so the cached
+    # factors are keyed apart from the raw-ratings ones.
+    user_f, item_f = _als_factors_leg(spark, centered)
     eval_r = centered.filter(
         ((F.col("user_id") * F.lit(2654435761)) % F.lit(4294967296))
         % F.lit(stride)

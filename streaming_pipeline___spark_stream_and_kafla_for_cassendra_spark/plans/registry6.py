@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from . import legs as _legs
 from .registry import _register, _t
 
 
@@ -327,6 +328,54 @@ _RECO_K = 5
 _RECO_SALT = "reco-v1"
 
 
+def _reco_recs(split):
+    """Top-K item-item co-purchase recommendations from the train side:
+    (p, q, rk) with rk ≤ K in (weight desc, q asc) order."""
+    train = (
+        split.filter("is_train")
+        .select("l_orderkey", "l_partkey")
+        .distinct()
+    )
+    ta = train.select(
+        F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p")
+    )
+    tb = train.select(
+        F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("q")
+    )
+    co = (
+        ta.join(tb, "o")
+        .filter(F.col("p") != F.col("q"))
+        .groupBy("p", "q")
+        .agg(F.count("*").alias("w"))
+    )
+    wk = Window.partitionBy("p").orderBy(F.desc("w"), F.asc("q"))
+    return (
+        co.select("p", "q", F.row_number().over(wk).alias("rk"))
+        .filter(F.col("rk") <= _RECO_K)
+    )
+
+
+def _reco_actual(split):
+    """Distinct (p, q) co-basket pairs on the test side."""
+    test = (
+        split.filter(~F.col("is_train"))
+        .select("l_orderkey", "l_partkey")
+        .distinct()
+    )
+    ea = test.select(
+        F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p")
+    )
+    eb = test.select(
+        F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("q")
+    )
+    return (
+        ea.join(eb, "o")
+        .filter(F.col("p") != F.col("q"))
+        .select("p", "q")
+        .distinct()
+    )
+
+
 def _reco_eval_legs(spark, sf_dir):
     """Materialized shared legs for the three recommender-evaluation
     metrics (precision@k here, MRR in registry9, nDCG in registry19):
@@ -334,17 +383,10 @@ def _reco_eval_legs(spark, sf_dir):
     recommendations from the md5-hash train split — against the SAME
     truth — distinct test-side co-baskets. A real pipeline scores the
     model once and computes every metric from the scored tables, so
-    the two tables are served through the fingerprint-keyed shared-
-    intermediate cache (same contract as ``_ngram_pair_leg``: any
-    input-file or implementation change invalidates).
+    both tables are served through the shared-leg cache over the split
+    frame (same contract as ``_ngram_pair_leg``).
 
-    Returns ``(recs, actual)``: recs = (p, q, rk) with rk ≤ K in
-    (weight desc, q asc) order; actual = distinct (p, q) test pairs.
-    """
-    from pyspark.sql import Window
-
-    from .registry import _materialized_leg, _t
-
+    Returns ``(recs, actual)``."""
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     is_train = F.substring(
         F.md5(
@@ -356,55 +398,8 @@ def _reco_eval_legs(spark, sf_dir):
         1,
     ).isin(*"0123456789ab")
     split = li.select("l_orderkey", "l_partkey", is_train.alias("is_train"))
-
-    def build_recs():
-        train = (
-            split.filter("is_train")
-            .select("l_orderkey", "l_partkey")
-            .distinct()
-        )
-        ta = train.select(
-            F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p")
-        )
-        tb = train.select(
-            F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("q")
-        )
-        co = (
-            ta.join(tb, "o")
-            .filter(F.col("p") != F.col("q"))
-            .groupBy("p", "q")
-            .agg(F.count("*").alias("w"))
-        )
-        wk = Window.partitionBy("p").orderBy(F.desc("w"), F.asc("q"))
-        return (
-            co.select("p", "q", F.row_number().over(wk).alias("rk"))
-            .filter(F.col("rk") <= _RECO_K)
-        )
-
-    def build_actual():
-        test = (
-            split.filter(~F.col("is_train"))
-            .select("l_orderkey", "l_partkey")
-            .distinct()
-        )
-        ea = test.select(
-            F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p")
-        )
-        eb = test.select(
-            F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("q")
-        )
-        return (
-            ea.join(eb, "o")
-            .filter(F.col("p") != F.col("q"))
-            .select("p", "q")
-            .distinct()
-        )
-
-    tag = f"reco-legs-v1|{_RECO_SALT}|{_RECO_K}"
-    srcs = [_reco_eval_legs]
-    recs = _materialized_leg(spark, tag + "|recs", li, srcs, build_recs)
-    actual = _materialized_leg(spark, tag + "|actual", li, srcs, build_actual)
-    return recs, actual
+    recs = _legs.leg(spark, split, _reco_recs)
+    return recs, _legs.leg(spark, split, _reco_actual)
 
 
 @_register(

@@ -111,99 +111,276 @@ def test_answered_request_same_schema_as_fallback(spark, events, summary):
     assert hit.columns == miss.columns
 
 
-def test_result_cache_hits_and_invalidates(spark, tmp_path):
+# --- shared-leg cache (plans/legs.py) ------------------------------------
+
+_BUILDS: list[str] = []
+
+
+def _count_by_v(df):
+    _BUILDS.append("count_by_v")
+    return df.groupBy("v").agg(F.count("*").alias("n"), F.sum("id").alias("s"))
+
+
+def _max_by_v(df):
+    _BUILDS.append("max_by_v")
+    return df.groupBy("v").agg(F.max("id").alias("m"))
+
+
+def _ratings(spark, sf_dir, prep):
+    """The ALS ratings frame of ``als_recommend_parts``; ``prep`` maps
+    the summed quantity to the rating."""
+    from streaming_pipeline___spark_stream_and_kafla_for_cassendra_spark.plans.registry import (
+        _t,
+    )
+
+    li = _t(spark, sf_dir, "lineitem")
+    o = _t(spark, sf_dir, "orders")
+    return (
+        li.join(o, li["l_orderkey"] == o["o_orderkey"])
+        .groupBy(
+            F.col("o_custkey").alias("user_id"),
+            F.col("l_partkey").alias("item_id"),
+        )
+        .agg(prep(F.sum("l_quantity")).alias("rating"))
+    )
+
+
+@pytest.fixture
+def leg_root(tmp_path, monkeypatch):
+    """A private cache root under ``tmp_path`` and a fresh build log."""
+    import tempfile
+
+    from streaming_pipeline___spark_stream_and_kafla_for_cassendra_spark.plans import (
+        legs,
+    )
+
+    monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
+    _BUILDS.clear()
+    return legs.root()
+
+
+def _entries(root):
     import os
+
+    return sorted(
+        e for e in os.listdir(root)
+        if os.path.exists(os.path.join(root, e, "_committed"))
+    )
+
+
+def _src(spark, tmp_path, n=1000, name="src"):
+    path = str(tmp_path / name)
+    spark.range(n).withColumn("v", F.col("id") % 7).write.mode(
+        "overwrite"
+    ).parquet(path)
+    return path
+
+
+def test_result_cache_hits_and_invalidates(spark, tmp_path, leg_root):
+    """A second leg over an unchanged input is served from the cache
+    directory; rewriting the input (new mtime/size) misses and
+    rebuilds."""
     import time
 
-    from pyspark.sql import functions as F
-
-    from streaming_pipeline___spark_stream_and_kafla_for_cassendra_spark.plans.result_cache import (
-        ResultCache,
+    from streaming_pipeline___spark_stream_and_kafla_for_cassendra_spark.plans.legs import (
+        leg,
     )
 
-    src = str(tmp_path / "src")
-    spark.range(1000).withColumn("v", F.col("id") % 7).write.parquet(src)
-    cache = ResultCache(path=str(tmp_path / "rc"))
-
-    def q():
-        return (
-            spark.read.parquet(src)
-            .groupBy("v")
-            .agg(F.count("*").alias("n"), F.sum("id").alias("s"))
-        )
-
-    r1, hit1 = cache.get_or_compute(q())
-    assert not hit1
-    r2, hit2 = cache.get_or_compute(q())
-    assert hit2
-    # the hit is served from the cache directory, not the source
-    assert all("/rc/" in f for f in r2.inputFiles())
+    src = _src(spark, tmp_path)
+    r1 = leg(spark, spark.read.parquet(src), _count_by_v)
+    r2 = leg(spark, spark.read.parquet(src), _count_by_v)
+    assert _BUILDS == ["count_by_v"]
+    assert all(leg_root in f for f in r2.inputFiles())
     assert sorted(map(tuple, r1.collect())) == sorted(map(tuple, r2.collect()))
-    # alias-insensitive: a semantically-equal plan still hits
-    r3, hit3 = cache.get_or_compute(
-        spark.read.parquet(src).groupBy("v")
-        .agg(F.count("*").alias("n"), F.sum("id").alias("s"))
-    )
-    assert hit3
-    # rewriting the input (new mtime/size) MUST miss and recompute
     time.sleep(0.05)
-    spark.range(1100).withColumn("v", F.col("id") % 7).write.mode(
-        "overwrite"
-    ).parquet(src)
-    r4, hit4 = cache.get_or_compute(q())
-    assert not hit4
-    assert sum(r.n for r in r4.collect()) == 1100
+    _src(spark, tmp_path, n=1100)
+    r3 = leg(spark, spark.read.parquet(src), _count_by_v)
+    assert _BUILDS == ["count_by_v"] * 2
+    assert sum(r.n for r in r3.collect()) == 1100
 
 
-def test_result_cache_keyed_materialization(spark, tmp_path):
-    """get_or_materialize: caller-keyed shared intermediates. The
-    thunk must not run on a hit (that's the whole point — the miss
-    path may carry an expensive exec-at-build pre-flight)."""
-    from pyspark.sql import functions as F
-
-    from streaming_pipeline___spark_stream_and_kafla_for_cassendra_spark.plans.result_cache import (
-        ResultCache,
+def test_result_cache_keyed_materialization(spark, tmp_path, leg_root):
+    """The build must not run on a hit: the miss path may carry an
+    expensive exec-at-build pre-flight."""
+    from streaming_pipeline___spark_stream_and_kafla_for_cassendra_spark.plans.legs import (
+        leg,
     )
 
-    cache = ResultCache(path=str(tmp_path / "rc3"))
-    calls = {"n": 0}
-
-    def thunk():
-        calls["n"] += 1
-        return spark.range(50).withColumn("v", F.col("id") * 2)
-
-    r1, hit1 = cache.get_or_materialize(spark, "leg-v1", thunk)
-    assert not hit1 and calls["n"] == 1
-    r2, hit2 = cache.get_or_materialize(spark, "leg-v1", thunk)
-    assert hit2 and calls["n"] == 1  # thunk NOT rebuilt on a hit
-    assert sorted(map(tuple, r1.collect())) == sorted(map(tuple, r2.collect()))
-    # a different key is a different entry
-    _, hit3 = cache.get_or_materialize(spark, "leg-v2", thunk)
-    assert not hit3 and calls["n"] == 2
+    src = _src(spark, tmp_path)
+    for _ in range(3):
+        leg(spark, spark.read.parquet(src), _count_by_v).collect()
+    assert _BUILDS == ["count_by_v"]
+    assert len(_entries(leg_root)) == 1
 
 
-def test_materialized_leg_never_caches_scanless_frames(spark):
-    """A .cache()d (or otherwise scan-less) fingerprint frame reports
-    NO input files; _materialized_leg must run the thunk UNCACHED
-    rather than mint a dataset-independent key (the r9 ALS-leg bug:
-    sf0.1 factors served to an sf0.001 run)."""
-    from streaming_pipeline___spark_stream_and_kafla_for_cassendra_spark.plans.registry import (
-        _materialized_leg,
+def test_leg_two_build_fns_over_one_input_are_two_entries(
+    spark, tmp_path, leg_root
+):
+    """The build function is part of the key: two builds over one
+    input (reco recs and actual over the same split) never share an
+    entry."""
+    from streaming_pipeline___spark_stream_and_kafla_for_cassendra_spark.plans.legs import (
+        leg,
     )
 
-    cached = spark.range(10).cache()
-    assert cached.inputFiles() == []
-    calls = {"n": 0}
+    df = spark.read.parquet(_src(spark, tmp_path))
+    counts = leg(spark, df, _count_by_v)
+    maxes = leg(spark, df, _max_by_v)
+    assert len(_entries(leg_root)) == 2
+    assert counts.columns == ["v", "n", "s"] and maxes.columns == ["v", "m"]
+    leg(spark, df, _count_by_v)
+    leg(spark, df, _max_by_v)
+    assert _BUILDS == ["count_by_v", "max_by_v"]
 
-    def thunk():
-        calls["n"] += 1
-        return spark.range(3)
 
+def test_leg_rejects_closures(spark, tmp_path, leg_root):
+    """A closed-over local is invisible to the key, so it is refused
+    rather than served stale."""
+    from streaming_pipeline___spark_stream_and_kafla_for_cassendra_spark.plans.legs import (
+        leg,
+    )
+
+    threshold = 3
+
+    def build(df):
+        return df.filter(F.col("v") > threshold)
+
+    with pytest.raises(TypeError, match="closes over"):
+        leg(spark, spark.read.parquet(_src(spark, tmp_path)), build)
+
+
+def test_materialized_leg_never_caches_scanless_frames(spark, leg_root):
+    """A frame with no file-scan leaf (here Range, cached) has nothing
+    that identifies its data: the leg must build uncached rather than
+    mint a dataset-independent key (the r9 ALS-leg bug: sf0.1 factors
+    served to an sf0.001 run)."""
+    from streaming_pipeline___spark_stream_and_kafla_for_cassendra_spark.plans.legs import (
+        key,
+        leg,
+    )
+
+    cached = spark.range(10).withColumn("v", F.col("id") % 2).cache()
+    assert key(cached, _count_by_v) is None
     for _ in range(2):
-        _materialized_leg(spark, "scanless-leg-test", cached, [], thunk)
-    # thunk ran BOTH times: nothing was published under this key
-    assert calls["n"] == 2
+        leg(spark, cached, _count_by_v)
+    assert _BUILDS == ["count_by_v"] * 2
+    assert _entries(leg_root) == []
     cached.unpersist()
+
+
+def test_leg_caches_frames_derived_from_cached_plans(
+    spark, tmp_path, leg_root
+):
+    """A frame derived from a .cache()d, materialized plan reports no
+    inputFiles(), yet its plan leaves still name the files: it is
+    cached, and keyed by those files."""
+    import os
+
+    from streaming_pipeline___spark_stream_and_kafla_for_cassendra_spark.plans.legs import (
+        key,
+        leg,
+    )
+
+    src = _src(spark, tmp_path)
+    base = spark.read.parquet(src).withColumn("id", F.col("id") * 2).cache()
+    base.count()
+    derived = base.filter(F.col("v") > 0)
+    assert derived.inputFiles() == []
+    k1 = key(derived, _count_by_v)
+    assert k1 is not None
+    leg(spark, derived, _count_by_v).collect()
+    leg(spark, derived, _count_by_v).collect()
+    assert _BUILDS == ["count_by_v"] and _entries(leg_root) == [k1]
+    part = next(
+        os.path.join(src, f) for f in os.listdir(src) if f.endswith(".parquet")
+    )
+    os.utime(part, ns=(1, 1))
+    assert key(derived, _count_by_v) != k1
+    base.unpersist()
+
+
+def test_als_leg_misses_on_changed_ratings_prep(spark, leg_root):
+    """An edit to the ratings prep over the same input files must
+    retrain (the stale-factors bug of a hand-listed key), while the
+    unchanged prep, built again as a new frame, is a hit."""
+    from streaming_pipeline___spark_stream_and_kafla_for_cassendra_spark.plans import (
+        legs,
+    )
+    from streaming_pipeline___spark_stream_and_kafla_for_cassendra_spark.plans.registry2 import (
+        _als_factors_leg,
+        _train_als_factors,
+    )
+
+    sf = SF
+    raw = _ratings(spark, sf, F.log1p).cache()
+    user_f, _ = _als_factors_leg(spark, raw)
+    user_f.count()
+    again = _ratings(spark, sf, F.log1p)
+    assert legs.key(again, _train_als_factors) == legs.key(
+        raw, _train_als_factors
+    )
+    _als_factors_leg(spark, again)[0].count()
+    assert len(_entries(leg_root)) == 1
+    edited = _ratings(spark, sf, lambda q: F.log1p(q) - F.lit(1.0))
+    assert legs.key(edited, _train_als_factors) != legs.key(
+        raw, _train_als_factors
+    )
+    edited_f, _ = _als_factors_leg(spark, edited)
+    assert edited_f.count() == user_f.count()
+    assert len(_entries(leg_root)) == 2
+    raw.unpersist()
+
+
+def test_leg_key_is_stable_across_jvms(spark):
+    """A fresh Python process with its own JVM derives the same key for
+    the same frame and files (Spark's semanticHash differs per JVM, so
+    a key built on it could never hit across processes)."""
+    import inspect
+    import json
+    import os
+    import subprocess
+    import sys
+    import textwrap
+
+    from streaming_pipeline___spark_stream_and_kafla_for_cassendra_spark.plans import (
+        legs,
+    )
+    from streaming_pipeline___spark_stream_and_kafla_for_cassendra_spark.plans.registry2 import (
+        _train_als_factors,
+    )
+
+    sf = SF
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = textwrap.dedent(
+        """
+        import json, sys
+        sys.path.insert(0, {repo!r})
+        from pyspark.sql import functions as F
+        from streaming_pipeline___spark_stream_and_kafla_for_cassendra_spark import get_session
+        from streaming_pipeline___spark_stream_and_kafla_for_cassendra_spark.plans import legs
+        from streaming_pipeline___spark_stream_and_kafla_for_cassendra_spark.plans.registry2 import _train_als_factors
+        spark = get_session("leg-key-child", master="local[1]", shuffle_partitions=2)
+        """
+    ).format(repo=repo)
+    script += inspect.getsource(_ratings) + textwrap.dedent(
+        """
+        print("KEY " + json.dumps(legs.key(
+            _ratings(spark, {sf!r}, F.log1p), _train_als_factors)))
+        spark.stop()
+        """
+    ).format(sf=sf)
+    out = subprocess.run(
+        [sys.executable, "-c", script],
+        capture_output=True,
+        text=True,
+        timeout=300,
+        check=True,
+    ).stdout
+    child = json.loads(
+        next(ln for ln in out.splitlines() if ln.startswith("KEY "))[4:]
+    )
+    parent = legs.key(_ratings(spark, sf, F.log1p), _train_als_factors)
+    assert parent is not None and child == parent
 
 
 def test_als_factor_leg_keys_by_dataset(spark):
@@ -251,23 +428,20 @@ def test_ngram_pair_leg_matches_live_miner(spark):
     assert all("spark_graft_shared_legs" in f for f in again.inputFiles())
 
 
-def test_result_cache_bypasses_unstattable_inputs(spark, tmp_path, monkeypatch):
+def test_result_cache_bypasses_unstattable_inputs(
+    spark, tmp_path, leg_root, monkeypatch
+):
     """Inputs the driver cannot stat must be UNCACHEABLE, not hashed to
     a stable sentinel (which would serve stale results after the input
     changed)."""
     import os
 
-    from pyspark.sql import functions as F
-
-    from streaming_pipeline___spark_stream_and_kafla_for_cassendra_spark.plans.result_cache import (
-        ResultCache,
+    from streaming_pipeline___spark_stream_and_kafla_for_cassendra_spark.plans.legs import (
+        key,
+        leg,
     )
 
-    src = str(tmp_path / "src2")
-    spark.range(100).write.parquet(src)
-    cache = ResultCache(path=str(tmp_path / "rc2"))
-    df = spark.read.parquet(src).agg(F.count("*").alias("n"))
-
+    df = spark.read.parquet(_src(spark, tmp_path, name="src2"))
     real_stat = os.stat
 
     def flaky_stat(p, *a, **kw):
@@ -276,15 +450,12 @@ def test_result_cache_bypasses_unstattable_inputs(spark, tmp_path, monkeypatch):
         return real_stat(p, *a, **kw)
 
     monkeypatch.setattr(os, "stat", flaky_stat)
-    assert ResultCache.fingerprint(df) is None
-    r1, hit1 = cache.get_or_compute(df)
-    assert not hit1
-    r2, hit2 = cache.get_or_compute(df)
-    assert not hit2  # never a hit, never published
+    assert key(df, _count_by_v) is None
+    leg(spark, df, _count_by_v)
+    leg(spark, df, _count_by_v)
     monkeypatch.undo()
-    assert not os.path.isdir(str(tmp_path / "rc2")) or not os.listdir(
-        str(tmp_path / "rc2")
-    )
+    assert _BUILDS == ["count_by_v"] * 2  # never a hit, never published
+    assert _entries(leg_root) == []
 
 
 def test_streaming_builder_pins_and_restores_shuffle_conf(spark):
@@ -306,22 +477,20 @@ def test_streaming_builder_pins_and_restores_shuffle_conf(spark):
     assert out.count() > 0
     assert spark.conf.get(key) == before
 
-
 def test_materialize_marker_not_written_on_failed_publish(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path, leg_root, monkeypatch
 ):
-    """ADVICE r6: a non-race rename failure (permissions, EXDEV) must
-    RAISE and leave no ``_committed`` marker — a marker without data
-    would poison every later lookup for that key."""
+    """A non-race rename failure (permissions, EXDEV) must RAISE and
+    leave no ``_committed`` marker — a marker without data would
+    poison every later lookup for that key."""
     import os
 
-    import pytest
-
-    from streaming_pipeline___spark_stream_and_kafla_for_cassendra_spark.plans.result_cache import (
-        ResultCache,
+    from streaming_pipeline___spark_stream_and_kafla_for_cassendra_spark.plans.legs import (
+        key,
+        leg,
     )
 
-    cache = ResultCache(path=str(tmp_path / "rc4"))
+    df = spark.read.parquet(_src(spark, tmp_path))
     real_rename = os.rename
 
     def broken_rename(src, dst, *a, **kw):
@@ -331,82 +500,82 @@ def test_materialize_marker_not_written_on_failed_publish(
 
     monkeypatch.setattr(os, "rename", broken_rename)
     with pytest.raises(PermissionError):
-        cache.get_or_materialize(spark, "leg-broken", lambda: spark.range(5))
-    monkeypatch.undo()
-    assert not os.path.exists(
-        str(tmp_path / "rc4" / "leg-broken" / "_committed")
-    )
+        leg(spark, df, _count_by_v)
+    monkeypatch.setattr(os, "rename", real_rename)
+    k = key(df, _count_by_v)
+    assert not os.path.exists(os.path.join(leg_root, k, "_committed"))
     # the entry stays usable: a retry with working rename publishes
-    r, hit = cache.get_or_materialize(spark, "leg-broken", lambda: spark.range(5))
-    assert not hit and r.count() == 5
+    assert leg(spark, df, _count_by_v).count() == 7
+    assert _BUILDS == ["count_by_v"] * 2 and _entries(leg_root) == [k]
 
 
 def test_shared_leg_cache_root_is_private_and_owned(tmp_path, monkeypatch):
-    """ADVICE r6: the shared-leg root must be per-user (uid suffix),
-    mode 0700, and ownership-verified — not a predictable world-
-    writable tempdir path another user can squat."""
+    """The shared-leg root must be per-user (uid suffix), mode 0700,
+    and ownership-verified — not a predictable world-writable tempdir
+    path another user can squat."""
     import os
     import tempfile
 
-    from streaming_pipeline___spark_stream_and_kafla_for_cassendra_spark.plans.registry import (
-        _prune_shared_legs,
-        _shared_leg_cache_root,
+    from streaming_pipeline___spark_stream_and_kafla_for_cassendra_spark.plans import (
+        legs,
     )
 
     monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
-    root = _shared_leg_cache_root()
+    root = legs.root()
     assert root.endswith(f"spark_graft_shared_legs-{os.getuid()}")
     assert (os.stat(root).st_mode & 0o777) == 0o700
     # a loosened mode is re-tightened on the next call
     os.chmod(root, 0o755)
-    assert (os.stat(_shared_leg_cache_root()).st_mode & 0o777) == 0o700
-    # pruning keeps the most-recently-published entries
+    assert (os.stat(legs.root()).st_mode & 0o777) == 0o700
+    # pruning keeps the most recently used entries
     for i in range(6):
         d = os.path.join(root, f"e{i}")
         os.makedirs(d)
         os.utime(d, (i + 1, i + 1))
-    _prune_shared_legs(root, keep=4)
+    legs._prune(root, keep=4)
     left = sorted(os.listdir(root))
     assert left == ["e2", "e3", "e4", "e5"]
 
 
-def test_result_cache_lookup_bumps_entry_mtime(spark, tmp_path):
-    """ADVICE r7: LRU pruning orders by entry-dir mtime, but only
-    publishes bumped it — a HOT entry (read every sweep) could be
-    evicted before an unused newer one. A lookup hit must now bump
-    the entry mtime so eviction order is true LRU."""
+def test_result_cache_lookup_bumps_entry_mtime(spark, tmp_path, leg_root):
+    """LRU pruning orders by entry-dir mtime; a hit must bump it so a
+    HOT entry (read every sweep) is not evicted before an unused newer
+    one."""
     import os
 
-    from streaming_pipeline___spark_stream_and_kafla_for_cassendra_spark.plans.result_cache import (
-        ResultCache,
+    from streaming_pipeline___spark_stream_and_kafla_for_cassendra_spark.plans.legs import (
+        key,
+        leg,
     )
 
-    cache = ResultCache(path=str(tmp_path / "rc5"))
-    cache.get_or_materialize(spark, "hot-leg", lambda: spark.range(3))
-    entry = str(tmp_path / "rc5" / "hot-leg")
+    df = spark.read.parquet(_src(spark, tmp_path))
+    leg(spark, df, _count_by_v)
+    entry = os.path.join(leg_root, key(df, _count_by_v))
     os.utime(entry, (1, 1))  # pretend it was published long ago
     assert os.path.getmtime(entry) == 1
-    _, hit = cache.get_or_materialize(spark, "hot-leg", lambda: spark.range(3))
-    assert hit
-    assert os.path.getmtime(entry) > 1  # the hit refreshed LRU order
+    leg(spark, df, _count_by_v)
+    assert _BUILDS == ["count_by_v"]  # the second call was a hit
+    assert os.path.getmtime(entry) > 1  # and refreshed LRU order
 
 
 def test_clear_shared_leg_cache_respects_no_clear_flag(
     tmp_path, monkeypatch
 ):
-    """ADVICE r7: a concurrent sweep reading a leg must be able to
-    opt out of another caller's rmtree — SPARK_GRAFT_LEG_CACHE_NO_CLEAR=1
-    turns clear_shared_leg_cache into a no-op for that process."""
+    """A concurrent sweep reading a leg must be able to opt out of
+    another caller's rmtree — SPARK_GRAFT_LEG_CACHE_NO_CLEAR=1 turns
+    clear_shared_leg_cache into a no-op for that process."""
     import os
     import tempfile
 
+    from streaming_pipeline___spark_stream_and_kafla_for_cassendra_spark.plans import (
+        legs,
+    )
     from streaming_pipeline___spark_stream_and_kafla_for_cassendra_spark.plans.registry import (
-        _shared_leg_cache_root,
         clear_shared_leg_cache,
     )
 
     monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
-    root = _shared_leg_cache_root()
+    root = legs.root()
     marker = os.path.join(root, "entry", "_committed")
     os.makedirs(os.path.dirname(marker))
     open(marker, "w").close()

@@ -107,6 +107,23 @@ def test_sprt_decisions_respect_boundaries(spark):
             assert r["steps_used"] == min(r["n_scanned"], 400)
 
 
+def test_sprt_fold_split_yields_one_element_per_char(spark):
+    """The SPRT char fold relies on split(s, '') giving exactly
+    length(s) elements with no trailing empty string: a trailing ''
+    would map to a NULL increment and corrupt llr and n_scanned. The
+    zero-width-match behaviour is version-sensitive, so pin it."""
+    from pyspark.sql import functions as F
+
+    row = (
+        spark.range(1)
+        .select(F.split(F.lit("abc"), "").alias("xs"))
+        .select(F.size("xs").alias("n"), "xs")
+        .first()
+    )
+    assert row["n"] == 3
+    assert row["xs"] == ["a", "b", "c"]
+
+
 def test_huber_location_between_min_and_mean_side(spark):
     r = _run(spark, "huber_location_daily_revenue")[0]
     # a robust location stays within scale of the mean
