@@ -41,24 +41,12 @@ def spread_for_compute(df: DataFrame, target: int | None = None) -> DataFrame:
     no-op — no exchange is added. Round-robin repartition is safe
     here because every caller computes row-wise deterministic
     results (asserted by the phash/fingerprint determinism gates).
+    The goal is the task-slot count, not ``spark.sql.shuffle.
+    partitions``: a cluster that sets thousands of shuffle partitions
+    would otherwise spread even a tiny frame into thousands of Python
+    workers.
     """
-    sc = df.sparkSession.sparkContext
-    goal = target
-    if goal is None:
-        # Floor defaultParallelism with the shuffle-partition conf
-        # (VERDICT r8 #4): under dynamic allocation the executor
-        # count at BUILD time can be arbitrarily small, and a goal of
-        # 2 would serialize the compute pass exactly where it is
-        # meant to spread; spark.sql.shuffle.partitions is the
-        # cluster-level statement of intended parallelism. Locally
-        # both are the core count — no behavior change.
-        try:
-            conf_floor = int(
-                df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-            )
-        except (TypeError, ValueError):  # pragma: no cover - "auto" etc.
-            conf_floor = 0
-        goal = max(sc.defaultParallelism, conf_floor)
+    goal = target or df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < goal:
         return df.repartition(goal)
     return df

@@ -137,10 +137,11 @@ def dedup_threshold_sensitivity(spark, sf_dir):
     n_docs = toks.count()
     out = None
     for t in _THRESH_PPM:
+        # count, not sum: when the miner's floor leaves ``scored``
+        # empty, sum over zero rows is NULL where the oracle's sum over
+        # the unfloored pair list is 0
         one = scored.agg(
-            F.sum(F.when(F.col("jac_ppm") >= t, 1).otherwise(0)).alias(
-                "n_pairs"
-            ),
+            F.count_if(F.col("jac_ppm") >= t).alias("n_pairs"),
             F.countDistinct(
                 F.when(F.col("jac_ppm") >= t, F.col("db"))
             ).alias("docs_dropped"),

@@ -7,6 +7,25 @@ size, Kryo serialization — minus the Hudi/HDFS/Kafka package wiring,
 which this engine replaces with stock parquet + an upsert lake sink
 (see streaming/lake.py).
 
+Parallelism comes from the host when this host runs the executors:
+
+* cores (:func:`host_cores`) — ``SPARK_GRAFT_CPUS`` when set (the one
+  statement of usable cores), else the process's CPU affinity set. The
+  default master is ``local[cores]``.
+* ``spark.sql.shuffle.partitions`` = cores on a ``local`` master. A
+  stateful streaming aggregation opens, commits and writes a delta
+  file for one state store per shuffle partition per micro-batch, a
+  fixed cost whatever the batch size, so partitions beyond the core
+  count add that cost without adding parallelism. Batch shuffles
+  start from the same count and AQE coalesces them further.
+* On any other master the driver's cores say nothing about the
+  executors, so the partition count is left to spark-submit /
+  ``spark-defaults.conf`` unless the caller passes one.
+
+Structured Streaming freezes the partition count into each query's
+checkpoint at first start, so a changed default only applies to new
+checkpoints; a restarted query keeps the count it was started with.
+
 Scale notes (the configs that matter at 100 TB / 1000 executors):
 
 * ``spark.sql.adaptive.enabled`` + coalescing — runtime re-plan fixes
@@ -25,13 +44,20 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
-DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
-# local[*] runs driver+executors in ONE JVM whose default heap is 1g —
-# 32 concurrent task threads starve and the JVM dies under checkpoint/
-# broadcast pressure long before the machine (128 GiB) is anywhere
-# near full. Only effective when set before the JVM launches.
+# local[*] runs driver and executors in ONE JVM, whose default 1g heap
+# starves concurrent tasks under checkpoint/broadcast pressure. -Xmx is
+# a ceiling: the JVM commits heap as it grows, so 24g may exceed a small
+# host's RAM. The heap is not derived from the host yet: a 40%-of-RAM
+# heap helped the CDC workloads, but its sf0.1 catalog sweeps on a
+# 4-core, 15.7 GiB host read slower, and the fraction needs its own
+# A/B (ROADMAP item 1). Only effective when set before the JVM launches.
 DEFAULT_DRIVER_MEMORY = os.environ.get("SPARK_GRAFT_DRIVER_MEMORY", "24g")
+
+
+def host_cores() -> int:
+    """Usable cores: ``SPARK_GRAFT_CPUS``, else the CPU affinity set."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(cpus) if cpus else len(os.sched_getaffinity(0))
 
 
 def get_session(
@@ -43,12 +69,12 @@ def get_session(
     """Build (or fetch) the engine SparkSession.
 
     On a real cluster ``master`` comes from spark-submit; locally we
-    default to ``local[$SPARK_GRAFT_CPUS]``.
+    default to ``local[cores]`` of :func:`host_cores`.
     """
     # Pin per-process BLAS/OpenMP pools to ONE thread for every Python
     # worker: a Spark task is already the unit of parallelism, so an
-    # unpinned OpenBLAS spawns ncpu threads PER worker — 32 workers ×
-    # 32 BLAS threads = ~1000 runnable threads thrashing one box.
+    # unpinned OpenBLAS spawns ncpu threads PER worker — ncpu workers
+    # × ncpu BLAS threads = ncpu² runnable threads thrashing one box.
     # Measured on the sf1 sweep: every numpy/Arrow-UDF-backed query
     # ran 4-11× slower unpinned (embedding_near_dup_pairs 26 s →
     # 301 s; pure-JVM queries unaffected). Set BEFORE the JVM
@@ -68,10 +94,16 @@ def get_session(
         os.environ.setdefault(var, "1")
 
     builder = SparkSession.builder.appName(app_name)
+    active = SparkSession.getActiveSession()
     if master:
         builder = builder.master(master)
-    elif SparkSession.getActiveSession() is None:
-        builder = builder.master(f"local[{DEFAULT_CPUS}]")
+    elif active is None:
+        master = f"local[{host_cores()}]"
+        builder = builder.master(master)
+    else:
+        master = active.sparkContext.master
+    if shuffle_partitions is None and master.startswith("local"):
+        shuffle_partitions = host_cores()
 
     conf = {
         "spark.driver.memory": DEFAULT_DRIVER_MEMORY,
@@ -93,14 +125,13 @@ def get_session(
         # let custom Python data sources receive pushed filters
         # (sources/cdc_source.py clamps its generated range with them)
         "spark.sql.python.filterPushdown.enabled": "true",
-        "spark.sql.shuffle.partitions": str(
-            shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
-        ),
         # keep local runs quiet and snappy
         "spark.ui.enabled": "false",
         "spark.ui.showConsoleProgress": "false",
         "spark.sql.autoBroadcastJoinThreshold": "64MB",
     }
+    if shuffle_partitions:
+        conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     for var in _blas_vars:
         conf[f"spark.executorEnv.{var}"] = os.environ[var]
     if extra_conf:
