@@ -1,9 +1,17 @@
 """Benchmark harness — prints ONE JSON line for the driver.
 
-Runs the headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
-/root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]``. Each query is
-materialized via the noop sink (full execution, no driver collect
-cost, no disk write) and wall-clock timed.
+Runs the headline queries at ``$SPARK_GRAFT_SF_DIR`` (default: the
+sf0.1 fixture set, ``SF_DIR``) on the engine session, whose master and
+shuffle partitions come from the host's cores (``$SPARK_GRAFT_CPUS``,
+else the CPU affinity set). Each query is materialized via the noop sink (full
+execution, no driver collect cost, no disk write) and wall-clock timed,
+min of ``$SPARK_GRAFT_BENCH_RUNS`` runs.
+
+Selection: ``SPARK_GRAFT_BENCH_SET=slow`` times the EXCLUDE set
+instead of the rest of the registry; ``SPARK_GRAFT_BENCH_ONLY`` (comma
+list) narrows either set. ``SPARK_GRAFT_BENCH_OUT`` is where the full
+per-query artifact goes. Two artifacts are compared with
+``tools/bench_diff.py``.
 """
 
 from __future__ import annotations
@@ -97,221 +105,28 @@ EXCLUDE: dict[str, str] = {
     ),
 }
 
-HEADLINE = None  # set in main() from the registry minus EXCLUDE
-
-# The r3 hand-picked headline list is kept for reference/debug runs
-# (SPARK_GRAFT_BENCH_SET=legacy).
-LEGACY_HEADLINE = [
-    "q01_pricing_summary",
-    "q03_shipping_priority",
-    "q05_region_revenue",
-    "q18_large_orders",
-    "left_join_order_counts",
-    "window_rank_top_orders",
-    "events_hourly_agg",
-    "events_daily_agg",
-    "asof_join_purchase_view",
-    "cdc_roundtrip_counts",
-    "dedup_exact_documents",
-    "ngram_jaccard_pairs",
-    "minhash_lsh_pairs",
-    "simhash_fingerprints",
-    "text_quality",
-    "ann_topk_bruteforce",
-    "ann_topk_lsh",
-    "ann_topk_ivf",
-    "ann_topk_quantized",
-    "ann_topk_pq",
-    "embedding_near_dup_pairs",
-    "multimodal_image_features",
-    "q07_volume_shipping",
-    "q09_product_profit",
-    "q13_customer_order_distribution",
-    "rollup_region_nation_sales",
-    "sessionize_events_batch",
-    "streaming_hourly_events",
-    "q21_waiting_suppliers",
-    "near_dup_clusters",
-    "tfidf_top_terms",
-    "range_join_incident_windows",
-    "repetition_quality_documents",
-    "sequence_pack_documents",
-    "domain_mix_reweight",
-    "pii_redaction_customers",
-    "boilerplate_lines_documents",
-    "streaming_rollup_events",
-    "market_basket_pairs",
-    "dense_ids_documents",
-    "top_p_tokens_per_source",
-    "daily_new_vs_returning_users",
-    "mad_outlier_events",
-    "event_type_transitions",
-    "rfm_segmentation_customers",
-    "psi_price_drift_bins",
-    "part_copurchase_kcore",
-    "unigram_surprisal_documents",
-    "ewma_user_value",
-    "interval_union_by_user",
-    "bfs_nation_hops",
-    "quality_ensemble_documents",
-    "streaming_ewma_users",
-    "priority_sample_documents",
-    "shard_manifest_documents",
-    "semantic_dedup_embeddings",
-    "streaming_anomaly_alerts",
-    "mixture_temperature_weights",
-    "decimal_exact_revenue",
-    "interval_overlap_user_incidents",
-    "ks_statistic_value_by_type",
-    "attribution_last_touch",
-    "mv_rewrite_daily_value_stats",
-    "hybrid_search_rrf",
-    "weighted_median_price_by_brand",
-    "bitmap_index_range_distinct",
-    "match_recognize_funnel_users",
-    "ts_subsequence_match_hourly",
-    "spatial_radius_join_customers",
-    "welch_ttest_value_by_type",
-    "cuped_adjusted_ab_events",
-    "readability_flesch_documents",
-    "html_strip_documents",
-    "oov_rate_documents",
-    "streaming_asof_enrich_purchases",
-    "mann_kendall_trend_daily",
-    "behavior_entropy_users",
-    "kl_divergence_source_unigrams",
-    "audience_overlap_event_types",
-    "fellegi_sunter_linkage_scores",
-    "label_propagation_nations",
-    "vocab_growth_heaps_documents",
-    "attribution_position_based",
-    "reco_precision_at_k",
-    "reconciliation_orders_lineitems",
-    "leaderboard_churn_monthly_parts",
-    "kendall_tau_daily_metrics",
-    "dau_mau_stickiness",
-    "ngram_containment_pairs",
-    "page_hinkley_drift_daily",
-    "hard_negative_mining",
-    "cms_token_counts",
-    "near_dup_canonical_docs",
-    "hhi_supplier_concentration",
-    "mmr_diverse_representatives",
-    "runtime_filter_asia_revenue",
-    "attribution_linear",
-    "kaplan_meier_conversion",
-    "benford_first_digit_orders",
-    "gdpr_cascade_counts",
-    "kappa_backfill_rollup_events",
-    "zipf_slope_vocab",
-    "join_cardinality_estimates",
-    "kfold_balance_documents",
-    "croston_intermittent_demand",
-    "reco_ndcg_at_k",
-    "holt_winters_daily_revenue",
-    "sprt_langid_early_exit",
-    "kmv_distinct_union_events",
-    "hurst_rs_daily_revenue",
-    "textrank_keywords_documents",
-    "zorder_pruning_audit",
-    "compaction_bin_packing_plan",
-    "bloom_filter_fp_audit",
-    "nelson_aalen_hazard",
-    "uplift_by_segment_events",
-    "watermark_delay_audit_events",
-    "huber_location_daily_revenue",
-    "negative_sampling_pairs",
-    "k_anonymity_report",
-    "consistent_hash_rebalance",
-    "histogram_selectivity_audit",
-    "kcenter_coreset_embeddings",
-    "betweenness_centrality_nations",
-    "shapley_attribution_channels",
-    "perceptron_daily_revenue",
-    "lru_cache_hit_rate",
-    "market_basket_triples",
-    "dup_span_extraction_documents",
-    "merkle_chain_events_daily",
-    "max_coverage_doc_selection",
-    "random_projection_distortion",
-    "encoding_size_estimator_lineitem",
-    "boolean_and_query_postings",
-    "session_edit_distance_pairs",
-    "rate_limiter_token_bucket",
-    "streaming_rate_limiter",
-    "window_funnel_users",
-    "inventory_ss_policy_replay",
-    "lfu_cache_hit_rate",
-    "rolling_percentile_rank_daily",
-    "kwic_concordance_documents",
-    "modularity_communities_nations",
-    "calibrated_noise_release_audit",
-    "wasserstein_price_weekday_weekend",
-    "quantile_treatment_effect_ab",
-    "regression_discontinuity_balance",
-    "cohort_ltv_curve",
-    "lexical_richness_by_source",
-    "streaming_window_funnel",
-    "content_defined_chunking_documents",
-    "attribution_time_decay",
-    "decision_stump_returnflag",
-    "post_click_next_action",
-    "soundex_blocking_parts",
-    "aa_test_calibration",
-    "check_constraint_audit",
-    "source_freshness_audit",
-    "ewma_alpha_grid_search",
-    "degree_assortativity_nations",
-    "stratified_ate_discount_returns",
-    "overdispersion_check_events",
-    "newsvendor_critical_fractile",
-    "percolation_hub_removal",
-    "cross_source_contamination_matrix",
-    "embedding_drift_centroids",
-    "hierarchical_forecast_reconciliation",
-    "churn_definition_sweep",
-    "event_type_lift_matrix",
-    "dedup_threshold_sensitivity",
-    "quantile_normalization_report",
-    "two_way_effects_decomposition",
-    "binary_segmentation_daily_revenue",
-    "duplicate_payment_screen",
-    "conformal_prediction_intervals",
-    "seasonality_strength_daily",
-    "active_orders_peak",
-    "order_backlog_aging",
-    "fulfillment_latency_by_priority",
-    "purchase_rate_wilson_by_hour",
-    "day_of_month_uniformity",
-    "supplier_scorecard",
-]
-
 
 def materialize(df) -> None:
-    if df.isStreaming:  # pragma: no cover - streaming handled in builder
-        df.count()
-    else:
-        df.write.format("noop").mode("overwrite").save()
+    """Run ``df`` to completion. Streaming builders run their stream
+    inside the builder and return a batch frame."""
+    df.write.format("noop").mode("overwrite").save()
 
 
-# Fixed pure-JVM calibration query, timed FIRST and LAST (VERDICT r6
-# #2): the official r6 artifact read 1.37x slower than the same-day
-# idle run because the grading box was contended, and nothing inside
-# the artifact could say so. The sentinel makes contention visible:
-# a 2-second whole-stage-codegen aggregation has no caches, no
-# Python workers and no disk writes of note, so any drift between
-# its first and last timing — or vs a previous round's sentinel —
-# is the BOX, not the code.
+# Fixed pure-JVM calibration query, timed FIRST and LAST and recorded
+# next to the sweep: a whole-stage-codegen aggregation with no caches,
+# no Python workers and no disk writes of note, so a reader can see how
+# the box behaved over the run. Nothing here interprets the two numbers
+# (on a freshly started JVM the first read is often the slow one: JIT
+# warm-up, not a co-tenant).
 SENTINEL_QUERY = "q01_pricing_summary"
 
 
-def _sentinel_time(by_name, spark, reps: int = 3) -> float:
-    """min-of-``reps`` — a single-shot sentinel conflates JIT tiering
+def _sentinel_time(by_name, spark) -> float:
+    """min-of-3 — a single-shot sentinel conflates JIT tiering
     with box contention (measured: q01 1.32 s on a 2-run-old JVM vs
-    0.59 s fully warm); the min over 3 consecutive runs is stable
-    enough that any first/last drift left is the machine."""
+    0.59 s fully warm)."""
     best = float("inf")
-    for _ in range(reps):
+    for _ in range(3):
         t0 = time.perf_counter()
         materialize(by_name[SENTINEL_QUERY].builder(spark, SF_DIR))
         best = min(best, time.perf_counter() - t0)
@@ -320,10 +135,7 @@ def _sentinel_time(by_name, spark, reps: int = 3) -> float:
 
 def main() -> None:
     by_name = {q.name: q for q in REGISTRY}
-    bench_set = os.environ.get("SPARK_GRAFT_BENCH_SET", "")
-    if bench_set == "legacy":
-        headline = LEGACY_HEADLINE
-    elif bench_set == "slow":
+    if os.environ.get("SPARK_GRAFT_BENCH_SET", "") == "slow":
         headline = list(EXCLUDE)
     else:
         headline = [q.name for q in REGISTRY if q.name not in EXCLUDE]
@@ -338,10 +150,9 @@ def main() -> None:
     # trace into the driver's captured tail
     spark.sparkContext.setLogLevel("ERROR")
     # warm-up passes so JVM/codegen startup doesn't skew query times.
-    # THREE runs, not one: the first timed sentinel otherwise reads
-    # JIT tiering as "contention" (measured: 1.26 s on a 2-run-old JVM
-    # vs 0.37 s fully warm in the r7 sf1 sweep) — C2 compilation of
-    # the scan/agg/noop-writer paths needs a few executions.
+    # THREE runs, not one: C2 compilation of the scan/agg/noop-writer
+    # paths needs a few executions (measured: 1.26 s on a 2-run-old
+    # JVM vs 0.37 s fully warm in the r7 sf1 sweep).
     for _ in range(3):
         materialize(by_name["q01_pricing_summary"].builder(spark, SF_DIR))
     try:
@@ -366,16 +177,13 @@ def main() -> None:
     # BOTH, and report warm — the steady-state pipeline cost — in the
     # headline map. min-of-1 campaigns (the true-sf1 sweep) skip the
     # protocol so the whole family still pays one mining run total.
-    coldwarm = runs >= 2 and os.environ.get(
-        "SPARK_GRAFT_BENCH_COLDWARM", "1"
-    ) != "0"
     timings: dict[str, float] = {}
     errors: dict[str, str] = {}
     cache_backed: dict[str, dict[str, float]] = {}
     cold_flags: dict[str, bool] = {}
     for name in headline:
         qd = by_name[name]
-        if coldwarm and name in CACHE_BACKED_QUERIES:
+        if runs >= 2 and name in CACHE_BACKED_QUERIES:
             try:
                 legs.clear()
                 t0 = time.perf_counter()
@@ -428,106 +236,10 @@ def main() -> None:
     except OSError:  # pragma: no cover
         loadavg_end = None
 
-    # ------------------------------------------------------------------
-    # Self-correction under contention (VERDICT r7 #1). Two rounds
-    # running, the official grading artifact was produced on a box
-    # with co-tenant load; the sentinel made that VISIBLE (r7) but the
-    # inflated per-query rows still had to be re-argued in prose. Now
-    # the bench corrects itself: when the sentinel flags drift >1.5x
-    # within the run — or the run's best sentinel reads >1.5x the
-    # best-known idle floor — re-time the rows that inflated >1.5x vs
-    # the best-known artifact, solo, after the sweep, each bracketed
-    # by fresh sentinel reads, and publish a ``corrected`` per-query
-    # column next to the raw one. Correction can only LOWER a row
-    # (min of raw and re-time): an idle re-time of an honestly-slow
-    # query reproduces the raw number.
-    # ------------------------------------------------------------------
-    corrected: dict[str, dict] = {}
-    correction_meta: dict = {}
-    baseline_path = os.environ.get(
-        "SPARK_GRAFT_BENCH_BASELINE"
-    ) or os.path.join(
-        os.path.dirname(os.path.abspath(__file__)),
-        "BENCH_BASELINE_BEST.json",
-    )
-    run_drift = max(sentinel_first, sentinel_last) / max(
-        min(sentinel_first, sentinel_last), 1e-9
-    )
-    try:
-        baseline = json.load(open(baseline_path))
-    except (OSError, ValueError):
-        baseline = None
-    sf_tag = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
-    if baseline is not None and str(baseline.get("sf")) != sf_tag:
-        correction_meta = {
-            "skipped": f"baseline sf {baseline.get('sf')} != run sf {sf_tag}"
-        }
-        baseline = None
-    elif baseline is None:
-        correction_meta = {"skipped": f"no baseline at {baseline_path}"}
-    if baseline is not None:
-        floor = float(baseline.get("sentinel_floor_s") or 0) or None
-        best_sent = min(sentinel_first, sentinel_last)
-        hot = run_drift > 1.5 or (
-            floor is not None and best_sent > 1.5 * floor
-        )
-        base_q = baseline.get("queries", {})
-        # inflated = slower than 1.5x the best-known time AND by more
-        # than 0.3 s absolute (sub-second jitter must not trigger a
-        # re-time storm); worst absolute inflation first, capped so
-        # the correction pass stays a bounded tail on the sweep.
-        cand = sorted(
-            (
-                (name, t)
-                for name, t in timings.items()
-                if name in base_q
-                and t > 1.5 * base_q[name]
-                and t - base_q[name] > 0.3
-            ),
-            key=lambda kv: base_q[kv[0]] - kv[1],
-        )
-        cap = int(os.environ.get("SPARK_GRAFT_BENCH_CORRECT_MAX", "20"))
-        correction_meta = {
-            "baseline": os.path.basename(baseline_path),
-            "sentinel_floor_s": floor,
-            "run_best_sentinel_s": best_sent,
-            "hot": hot,
-            "inflated_rows": len(cand),
-            "capped_to": min(len(cand), cap) if hot else 0,
-        }
-        if hot:
-            for name, raw in cand[:cap]:
-                qd = by_name[name]
-                sb = _sentinel_time(by_name, spark, reps=2)
-                best = float("inf")
-                try:
-                    # cache-backed rows re-time WARM by construction
-                    # (the cache is not cleared here): their corrected
-                    # number is comparable to the warm column, and the
-                    # one-time cold mining cost stays in cold.
-                    for _ in range(runs):
-                        t0 = time.perf_counter()
-                        materialize(qd.builder(spark, SF_DIR))
-                        best = min(best, time.perf_counter() - t0)
-                except Exception:  # noqa: BLE001 - keep raw row on any failure
-                    continue
-                sa = _sentinel_time(by_name, spark, reps=2)
-                corrected[name] = {
-                    "raw": raw,
-                    "corrected": round(min(raw, best), 3),
-                    "base": base_q[name],
-                    "sentinel_before_s": sb,
-                    "sentinel_after_s": sa,
-                }
     sentinel = {
         "query": SENTINEL_QUERY,
         "first_s": sentinel_first,
         "last_s": sentinel_last,
-        "drift": round(
-            max(sentinel_first, sentinel_last)
-            / max(min(sentinel_first, sentinel_last), 1e-9),
-            3,
-        ),
         "loadavg_start": loadavg_start,
         "loadavg_end": loadavg_end,
         "blas_pins": {
@@ -553,17 +265,6 @@ def main() -> None:
         "sf": sf_val,
         "sentinel": sentinel,
     }
-    if correction_meta:
-        full["correction"] = correction_meta
-    if corrected:
-        full["corrected"] = corrected
-        full["value_corrected"] = round(
-            sum(
-                corrected[n]["corrected"] if n in corrected else t
-                for n, t in timings.items()
-            ),
-            3,
-        )
     if cache_backed:
         full["cache_backed"] = cache_backed
     if cold_flags:
@@ -588,13 +289,6 @@ def main() -> None:
     items = sorted(timings.items())
     for i in range(0, len(items), 10):
         print("per-query:", json.dumps(dict(items[i : i + 10])))
-    if corrected:
-        print(
-            "corrected:",
-            json.dumps(
-                {n: v["corrected"] for n, v in sorted(corrected.items())}
-            ),
-        )
     # The inline map carries the 10 slowest queries PLUS the 10
     # slowest of the previous artifact, read before it is overwritten
     # (VERDICT r8 #6): the round-over-round comparator
@@ -623,9 +317,6 @@ def main() -> None:
         "sentinel_first_s": sentinel_first,
         "sentinel_last_s": sentinel_last,
     }
-    if corrected:
-        summary["n_corrected"] = len(corrected)
-        summary["value_corrected"] = full["value_corrected"]
     # stop any stream a failed builder left behind BEFORE spark.stop()
     # kills it mid-batch (that race prints a JVM interrupt stack trace)
     for s in spark.streams.active:

@@ -3,38 +3,31 @@
 Compares two bench JSON artifacts (the full per-query payloads that
 bench.py writes — BENCH_LOCAL_LATEST.json / BENCH_SLOW_r{N}.json /
 BENCH_SF1_r{N}.json) and reports per-query deltas, flagging queries
-slower than ``--threshold`` (default 1.5×, with a 0.3 s absolute
+slower than the ``threshold`` argument (default 1.5×, with a 0.3 s absolute
 floor so sub-second jitter doesn't flag).
 
 Usage: python tools/bench_diff.py OLD.json NEW.json [threshold]
-Exit codes: 0 = clean, no regressions; 1 = regressions on a clean
-measurement; 2 = contaminated run WITH regressions (measurement
-invalid — re-time before reading the deltas as code); 3 = usage.
-When the new artifact carries a ``corrected`` column (bench.py
-self-correction under contention), the corrected time is used for
-flagging — a row whose solo re-time is clean is not a regression.
+Exit codes: 0 = no regressions; 1 = regressions; 3 = usage.
+
+A single pair of sweeps on a shared host can spread widely; compare
+alternating paired sweeps before reading a delta as code.
 """
 
 from __future__ import annotations
 
 import json
 import sys
+from pathlib import Path
 
 
-def main() -> int:
-    if len(sys.argv) < 3:
+def main(argv: list[str] | None = None) -> int:
+    args = sys.argv[1:] if argv is None else argv
+    if len(args) < 2:
         print(__doc__)
         return 3
-    old = json.load(open(sys.argv[1]))
-    new = json.load(open(sys.argv[2]))
-    thr = float(sys.argv[3]) if len(sys.argv) > 3 else 1.5
-    oq, nq = old.get("queries", {}), dict(new.get("queries", {}))
-    # substitute the self-corrected re-time where the new artifact has
-    # one: the raw number is documented contention, not code
-    ncorr = new.get("corrected", {})
-    for name, row in ncorr.items():
-        if name in nq:
-            nq[name] = min(nq[name], row.get("corrected", nq[name]))
+    old, new = (json.loads(Path(a).read_text()) for a in args[:2])
+    thr = float(args[2]) if len(args) > 2 else 1.5
+    oq, nq = old.get("queries", {}), new.get("queries", {})
     common = sorted(set(oq) & set(nq))
     added = sorted(set(nq) - set(oq))
     removed = sorted(set(oq) - set(nq))
@@ -59,38 +52,6 @@ def main() -> int:
         print("added:", ", ".join(added))
     if removed:
         print("removed:", ", ".join(removed))
-    # Calibration sentinel (VERDICT r6 #2): a fixed pure-JVM query is
-    # timed first and last inside each bench run. If either artifact's
-    # sentinel drifted >1.5x within its own run, or the two runs'
-    # sentinels differ >1.5x, the per-query deltas above measure BOX
-    # CONTENTION, not code — say so loudly and don't fail the diff on
-    # regressions alone.
-    contaminated = False
-    sents = {}
-    for label, art in (("old", old), ("new", new)):
-        s = art.get("sentinel")
-        if not s:
-            continue
-        sents[label] = s
-        if s.get("drift", 1.0) > 1.5:
-            contaminated = True
-            print(
-                f"CONTENTION {label}: sentinel {s['query']} drifted "
-                f"{s['first_s']}s -> {s['last_s']}s ({s['drift']}x) "
-                f"within the run; loadavg {s.get('loadavg_start')} -> "
-                f"{s.get('loadavg_end')}"
-            )
-    if len(sents) == 2:
-        a = min(sents["old"]["first_s"], sents["old"]["last_s"])
-        b = min(sents["new"]["first_s"], sents["new"]["last_s"])
-        r = max(a, b) / max(min(a, b), 1e-9)
-        if r > 1.5:
-            contaminated = True
-            print(
-                f"CONTENTION cross-run: sentinel best {a}s (old) vs "
-                f"{b}s (new) — {r:.2f}x; per-query deltas reflect box "
-                "state, not code"
-            )
     ocb, ncb = old.get("cache_backed", {}), new.get("cache_backed", {})
     for name in sorted(set(ocb) & set(ncb)):
         a, b = ocb[name], ncb[name]
@@ -100,18 +61,6 @@ def main() -> int:
         )
     if not regressions:
         print("no regressions above threshold")
-    if contaminated:
-        print(
-            "verdict: CONTAMINATED RUN — re-time on an idle box before "
-            "reading regressions as code"
-        )
-    # Exit codes (ADVICE r7): a contaminated run that ALSO shows
-    # regressions must not read as a clean pass — a real code
-    # regression on a mildly contended box would silently slip
-    # through. 2 tells automation "measurement invalid, re-time";
-    # only a clean run with no regressions returns 0.
-    if regressions and contaminated:
-        return 2
     return 1 if regressions else 0
 
 

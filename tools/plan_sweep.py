@@ -136,19 +136,20 @@ def streaming_sweep(sf_dir: str, out: str, heavy: bool = False) -> None:
     builders actually ran, including the pre-collect fact scans."""
     import urllib.request
 
-    from pyspark.sql import SparkSession
+    from streaming_pipeline___spark_stream_and_kafla_for_cassendra_spark import (
+        get_session,
+    )
 
-    spark = (
-        SparkSession.builder.master(
-            f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]"
-        )
-        .appName("plan-sweep-streaming")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.retainedJobs", "10000")
-        .config("spark.sql.ui.retainedExecutions", "10000")
-        .getOrCreate()
+    # the engine's own session conf (host-derived parallelism, broadcast
+    # threshold, AQE) so the lint sees the plans the engine runs; only
+    # the UI is switched on, for the REST endpoint below
+    spark = get_session(
+        "plan-sweep-streaming",
+        extra_conf={
+            "spark.ui.enabled": "true",
+            "spark.ui.retainedJobs": "10000",
+            "spark.sql.ui.retainedExecutions": "10000",
+        },
     )
     spark.sparkContext.setLogLevel("ERROR")
     ui = spark.sparkContext.uiWebUrl

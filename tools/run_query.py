@@ -11,9 +11,10 @@
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from streaming_pipeline___spark_stream_and_kafla_for_cassendra_spark import get_session
 from streaming_pipeline___spark_stream_and_kafla_for_cassendra_spark.plans.registry import (
@@ -45,7 +46,7 @@ def main() -> None:
     if q is None:
         sys.exit(f"unknown query {args.name!r}; --list to enumerate")
 
-    spark = get_session("run-query", master="local[8]", shuffle_partitions=8)
+    spark = get_session("run-query")
     df = q.builder(spark, args.sf)
     if args.explain:
         df.explain("formatted")
