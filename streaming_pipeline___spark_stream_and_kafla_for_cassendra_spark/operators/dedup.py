@@ -50,7 +50,7 @@ def dedup_exact(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 def minhash_constants(num_hashes: int = 64) -> tuple[list[int], list[int]]:
     """The (a, b) universal-hash constants as plain ints — the single
     source shared by :func:`minhash_signatures` and the DuckDB oracle
-    generator in plans/registry.py, so both derive identical hashes."""
+    generator in plans/core.py, so both derive identical hashes."""
     import numpy as np
 
     rng = np.random.default_rng(42)

@@ -134,16 +134,6 @@ def reservoir_per_group(
     )
 
 
-def sample_threshold_sql(fraction: float, key_expr: str, salt: str = "v1") -> str:
-    """The equivalent ANSI-SQL predicate (DuckDB-compatible) — used by
-    the registry oracles so the gate proves cross-engine stability."""
-    thr = fraction_threshold_hex(fraction)
-    return (
-        f"substr(md5('{salt}' || CAST({key_expr} AS VARCHAR)), 1, {HEX_WIDTH})"
-        f" < '{thr}'"
-    )
-
-
 def mixture_reweight(
     df: DataFrame,
     strata_col: str,

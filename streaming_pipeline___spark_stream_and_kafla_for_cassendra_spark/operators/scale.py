@@ -75,12 +75,6 @@ def save_bucketed(
     writer.saveAsTable(table)
 
 
-def read_bucketed(spark: SparkSession, table: str) -> DataFrame:
-    """Read a bucketed table (bucket metadata comes from the catalog —
-    a plain ``spark.read.parquet`` on the files would lose it)."""
-    return spark.table(table)
-
-
 def salted_join(
     big: DataFrame,
     small: DataFrame,

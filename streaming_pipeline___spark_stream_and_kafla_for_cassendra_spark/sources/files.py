@@ -87,19 +87,3 @@ def read_orc(spark: SparkSession, path: str, schema: StructType | None = None) -
 def write_orc(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     df.write.mode(mode).orc(path)
 
-
-def read_avro(spark: SparkSession, path: str, schema: StructType | None = None) -> DataFrame:
-    """Avro ingestion — gated: the spark-avro module is an external
-    jar; environments without it get a clear error instead of a
-    ClassNotFound stack."""
-    try:
-        reader = spark.read
-        if schema is not None:
-            reader = reader.schema(schema)
-        return reader.format("avro").load(path)
-    except Exception as exc:  # pragma: no cover - depends on jar presence
-        raise RuntimeError(
-            "Avro support requires the spark-avro package "
-            "(org.apache.spark:spark-avro_2.13); add it via "
-            "spark.jars.packages"
-        ) from exc

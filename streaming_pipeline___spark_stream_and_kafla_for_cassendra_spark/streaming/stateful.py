@@ -686,7 +686,7 @@ def rate_limit_stream(
 ) -> DataFrame:
     """Per-key token-bucket rate limiter carried across micro-batches
     — the streaming twin of the batch ``rate_limiter_token_bucket``
-    fold (plans/registry33.py): identical integer arithmetic
+    fold (plans/families/relational/timeseries.py): identical integer arithmetic
     (balance in microseconds of token credit, refill = elapsed event
     time, spend = ``token_us``), identical (ts, id) ordering, so an
     availableNow run's final per-key emission is bit-identical to
@@ -773,7 +773,7 @@ def window_funnel_stream(
 ) -> DataFrame:
     """Per-key windowFunnel carried across micro-batches — the
     streaming twin of the batch ``window_funnel_users`` fold
-    (plans/registry34.py): identical [stage, start, best] integer
+    (plans/families/relational/timeseries.py): identical [stage, start, best] integer
     recurrence (restart on stage-1, advance on the exact next stage
     inside the window), identical (ts, id) ordering, so an
     availableNow run's final per-key emission is bit-identical to

@@ -129,7 +129,7 @@ def _max_by_v(df):
 def _ratings(spark, sf_dir, prep):
     """The ALS ratings frame of ``als_recommend_parts``; ``prep`` maps
     the summed quantity to the rating."""
-    from streaming_pipeline___spark_stream_and_kafla_for_cassendra_spark.plans.registry import (
+    from streaming_pipeline___spark_stream_and_kafla_for_cassendra_spark.plans.core import (
         _t,
     )
 
@@ -306,7 +306,7 @@ def test_als_leg_misses_on_changed_ratings_prep(spark, leg_root):
     from streaming_pipeline___spark_stream_and_kafla_for_cassendra_spark.plans import (
         legs,
     )
-    from streaming_pipeline___spark_stream_and_kafla_for_cassendra_spark.plans.registry2 import (
+    from streaming_pipeline___spark_stream_and_kafla_for_cassendra_spark.plans.families.ml.models import (
         _als_factors_leg,
         _train_als_factors,
     )
@@ -345,7 +345,7 @@ def test_leg_key_is_stable_across_jvms(spark):
     from streaming_pipeline___spark_stream_and_kafla_for_cassendra_spark.plans import (
         legs,
     )
-    from streaming_pipeline___spark_stream_and_kafla_for_cassendra_spark.plans.registry2 import (
+    from streaming_pipeline___spark_stream_and_kafla_for_cassendra_spark.plans.families.ml.models import (
         _train_als_factors,
     )
 
@@ -358,7 +358,7 @@ def test_leg_key_is_stable_across_jvms(spark):
         from pyspark.sql import functions as F
         from streaming_pipeline___spark_stream_and_kafla_for_cassendra_spark import get_session
         from streaming_pipeline___spark_stream_and_kafla_for_cassendra_spark.plans import legs
-        from streaming_pipeline___spark_stream_and_kafla_for_cassendra_spark.plans.registry2 import _train_als_factors
+        from streaming_pipeline___spark_stream_and_kafla_for_cassendra_spark.plans.families.ml.models import _train_als_factors
         spark = get_session("leg-key-child", master="local[1]", shuffle_partitions=2)
         """
     ).format(repo=repo)
@@ -410,10 +410,12 @@ def test_ngram_pair_leg_matches_live_miner(spark):
     from streaming_pipeline___spark_stream_and_kafla_for_cassendra_spark.operators.dedup import (
         ngram_jaccard_pairs,
     )
-    from streaming_pipeline___spark_stream_and_kafla_for_cassendra_spark.plans.registry import (
+    from streaming_pipeline___spark_stream_and_kafla_for_cassendra_spark.plans.core import (
+        _t,
+    )
+    from streaming_pipeline___spark_stream_and_kafla_for_cassendra_spark.plans.families.mining.dedup import (
         _NGRAM_LEG_PARAMS,
         _ngram_pair_leg,
-        _t,
     )
 
     sf_dir = "/root/testdata/sf0.001"
@@ -462,7 +464,7 @@ def test_streaming_builder_pins_and_restores_shuffle_conf(spark):
     """Streaming-tagged builders run under the pinned state-partition
     count and MUST restore the session conf afterwards — a leak would
     silently re-plan every later batch query at 8 partitions."""
-    from streaming_pipeline___spark_stream_and_kafla_for_cassendra_spark.plans.registry import (
+    from streaming_pipeline___spark_stream_and_kafla_for_cassendra_spark.plans.core import (
         REGISTRY,
         _stream_state_partitions,
     )
@@ -587,16 +589,15 @@ def test_clear_shared_leg_cache_respects_no_clear_flag(
     assert not os.path.exists(root)  # default behavior unchanged
 
 
-def test_stream_state_partition_sizing_rule(tmp_path, monkeypatch):
+def test_stream_state_partition_sizing_rule(tmp_path):
     """VERDICT r6 #8: the state-partition pin derives from estimated
     state volume (fraction of the largest streamed fact table) rather
     than a hand table — reproducing the measured 8 at fixture scale
     and scaling up past the per-partition state target."""
-    from streaming_pipeline___spark_stream_and_kafla_for_cassendra_spark.plans.registry import (
+    from streaming_pipeline___spark_stream_and_kafla_for_cassendra_spark.plans.core import (
         _stream_state_partitions,
     )
 
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_SHUFFLE", raising=False)
     assert _stream_state_partitions() == 8  # no input info -> floor
     # fixture scale: a few MB of state -> the measured r6 optimum
     assert _stream_state_partitions("/root/testdata/sf0.1") == 8
@@ -605,16 +606,13 @@ def test_stream_state_partition_sizing_rule(tmp_path, monkeypatch):
     with open(big, "wb") as fh:
         fh.truncate(4 << 30)  # sparse; getsize sees 4 GiB
     assert _stream_state_partitions(str(tmp_path)) == 16
-    # production override still wins
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_SHUFFLE", "12")
-    assert _stream_state_partitions(str(tmp_path)) == 12
 
 
 def test_python_stateful_tag_exempts_pin(spark):
     """applyInPandasWithState queries are CPU-bound in Python workers
     and keep full session parallelism; the tag — not a name table —
     is what exempts them."""
-    from streaming_pipeline___spark_stream_and_kafla_for_cassendra_spark.plans.registry import (
+    from streaming_pipeline___spark_stream_and_kafla_for_cassendra_spark.plans.core import (
         REGISTRY,
         _stream_conf,
     )
@@ -644,7 +642,7 @@ def test_mining_plan_observability_through_cache(spark):
     from streaming_pipeline___spark_stream_and_kafla_for_cassendra_spark.operators import (
         dedup as dd,
     )
-    from streaming_pipeline___spark_stream_and_kafla_for_cassendra_spark.plans.registry import (
+    from streaming_pipeline___spark_stream_and_kafla_for_cassendra_spark.plans.families.mining.dedup import (
         _ngram_pair_leg,
     )
 

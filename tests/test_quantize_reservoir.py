@@ -133,7 +133,7 @@ def test_paragraph_dedup_flags_exact_copy(spark):
         q for q in REGISTRY if q.name == "dedup_paragraphs_documents"
     ).builder
 
-    import streaming_pipeline___spark_stream_and_kafla_for_cassendra_spark.plans.registry as reg
+    import streaming_pipeline___spark_stream_and_kafla_for_cassendra_spark.plans.families.mining.dedup as reg
 
     orig = reg._t
     reg._t = lambda sp, sf, name: docs  # noqa: ARG005

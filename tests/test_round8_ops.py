@@ -150,7 +150,7 @@ def test_markov_distributed_fallback_matches_driver_fold(spark):
     scales never exercise (VERDICT r8 #2)."""
     from pyspark.sql import Window
 
-    from streaming_pipeline___spark_stream_and_kafla_for_cassendra_spark.plans.registry16 import (
+    from streaming_pipeline___spark_stream_and_kafla_for_cassendra_spark.plans.families.mining.graph import (
         _markov_conv_distributed,
     )
 
@@ -180,24 +180,24 @@ def test_max_coverage_breaks_cleanly_when_vocab_exhausts(spark):
     """When every trigram is covered before _MC_ROUNDS picks, the
     greedy loop must emit fewer rows (the pre-r8 behavior), not
     IndexError on an empty gain table (ADVICE r8)."""
-    from streaming_pipeline___spark_stream_and_kafla_for_cassendra_spark.plans import (
-        registry31,
+    from streaming_pipeline___spark_stream_and_kafla_for_cassendra_spark.plans.families.ml import (
+        training_data,
     )
 
     docs = spark.createDataFrame(
         [(1, "alpha beta gamma delta"), (2, "alpha beta gamma delta")],
         "doc_id long, text string",
     )
-    orig_t = registry31._t
-    registry31._t = lambda _s, _d, _n: docs
+    orig_t = training_data._t
+    training_data._t = lambda _s, _d, _n: docs
     try:
         rows = BY["max_coverage_doc_selection"].builder(spark, SF_SMOKE).collect()
     finally:
-        registry31._t = orig_t
+        training_data._t = orig_t
     # 2 distinct trigrams per doc, both docs identical: everything is
     # covered after 2 picks (the 2nd contributes gain 0 but still
     # rows >= 1); far fewer than _MC_ROUNDS, and no IndexError.
-    assert 1 <= len(rows) < registry31._MC_ROUNDS
+    assert 1 <= len(rows) < training_data._MC_ROUNDS
     assert rows[0].round == 1
 
 

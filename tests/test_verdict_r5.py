@@ -19,7 +19,8 @@ import zlib
 import duckdb
 import pytest
 
-from streaming_pipeline___spark_stream_and_kafla_for_cassendra_spark.plans import registry2, registry55
+from streaming_pipeline___spark_stream_and_kafla_for_cassendra_spark.plans.families.mining import dedup as mining_dedup
+from streaming_pipeline___spark_stream_and_kafla_for_cassendra_spark.plans.families.text import quality as text_quality
 from streaming_pipeline___spark_stream_and_kafla_for_cassendra_spark.plans.registry import REGISTRY
 
 SF = "/root/testdata/sf0.001"
@@ -41,7 +42,7 @@ def test_lsh_quality_stratum_is_corpus_at_small_sf(spark):
 def test_lsh_quality_stratum_activates_and_bounds_truth(spark, monkeypatch):
     # Shrink the cap so the 500-doc fixture exercises the stride>1
     # path the real corpus hits at sf1 (50k docs / 10k cap = stride 5).
-    monkeypatch.setattr(registry55, "LSH_QUALITY_STRATUM", 100)
+    monkeypatch.setattr(mining_dedup, "LSH_QUALITY_STRATUM", 100)
     df = BY_NAME["lsh_blocking_quality"].builder(spark, SF)
     row = df.collect()[0]
     assert row["n_docs"] == 500
@@ -103,7 +104,7 @@ def test_compression_calibration_matches_local_zlib(spark):
         for r in BY_NAME["compression_ratio_documents"].builder(spark, SF).collect()
     }
     assert set(rows) == {-1, -2, -3}
-    cals = {-1: registry2._CAL1, -2: registry2._CAL2, -3: registry2._cal3()}
+    cals = {-1: text_quality._CAL1, -2: text_quality._CAL2, -3: text_quality._cal3()}
     for did, text in cals.items():
         comp = len(zlib.compress(text.encode("utf-8"), 6))
         r = rows[did]

@@ -1,7 +1,7 @@
 """Generate CATALOG.md — the machine-derived registry index.
 
-One row per registry query: name, check kind (DuckDB oracle vs
-rows-only), tags, and the first sentence of its description. Complements
+One row per registry query: name, family module, check kind (DuckDB
+oracle vs rows-only), tags, and the first sentence of its description. Complements
 the hand-written COVERAGE.md (which maps SURVEY §2 items to
 implementations); this file is regenerated, never edited.
 
@@ -10,10 +10,12 @@ Usage: python tools/make_catalog.py
 
 from __future__ import annotations
 
+import os
 import sys
 from collections import Counter
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from streaming_pipeline___spark_stream_and_kafla_for_cassendra_spark.plans.registry import (  # noqa: E402
     REGISTRY,
@@ -41,18 +43,19 @@ def main() -> None:
         + ", ".join(f"{t}×{c}" for t, c in sorted(tag_counts.items()))
     )
     lines.append("")
-    lines.append("| query | check | tags | what it is |")
-    lines.append("|---|---|---|---|")
+    lines.append("| query | family | check | tags | what it is |")
+    lines.append("|---|---|---|---|---|")
     for q in REGISTRY:
+        family = q.builder.__module__.split(".plans.families.")[-1]
         check = "✅O" if q.oracle is not None else "✅R"
         desc = " ".join(q.description.split())
         first = desc.split(". ")[0]
         if len(first) > 220:
             first = first[:217] + "…"
         lines.append(
-            f"| `{q.name}` | {check} | {', '.join(q.tags)} | {first} |"
+            f"| `{q.name}` | {family} | {check} | {', '.join(q.tags)} | {first} |"
         )
-    with open("/root/repo/CATALOG.md", "w", encoding="utf-8") as f:
+    with open(os.path.join(REPO, "CATALOG.md"), "w", encoding="utf-8") as f:
         f.write("\n".join(lines) + "\n")
     print(f"wrote CATALOG.md: {len(REGISTRY)} queries, {n_oracle} oracled")
 

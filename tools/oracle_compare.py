@@ -23,7 +23,7 @@ import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from streaming_pipeline___spark_stream_and_kafla_for_cassendra_spark import get_session
 from streaming_pipeline___spark_stream_and_kafla_for_cassendra_spark.plans.registry import (

@@ -16,11 +16,12 @@ Usage: python tools/run_pipeline_demo.py [rows_per_topic]
 from __future__ import annotations
 
 import json
+import os
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from streaming_pipeline___spark_stream_and_kafla_for_cassendra_spark import get_session
 from streaming_pipeline___spark_stream_and_kafla_for_cassendra_spark.sources.cdc_source import (
